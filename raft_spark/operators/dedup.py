@@ -283,7 +283,8 @@ def dedup_clusters(
     LSH hot-bucket / stop-shingle caps upstream.
     """
     from raft_spark.operators.solvers import (
-        connected_components, driver_union_find, probe_edges_driver,
+        connected_components, driver_union_find, labels_frame,
+        probe_edges_driver,
     )
 
     spark = pairs.sparkSession
@@ -303,20 +304,17 @@ def dedup_clusters(
     # the fully distributed solve.
     probe = probe_edges_driver(coo, _DRIVER_CLUSTERS_EDGES)
     if probe is not None:
-        with _no_aqe(spark, limit_rows=_DRIVER_CLUSTERS_DOCS):
-            t = docs.select(
-                F.col(id_col).cast("long").alias("doc_id")
-            ).limit(_DRIVER_CLUSTERS_DOCS + 1).toArrow()
-        ids = t.column("doc_id").to_pylist()
-        if t.num_rows <= _DRIVER_CLUSTERS_DOCS \
-                and not any(i is None for i in ids):
+        lab = driver_union_find((int(r["row"]), int(r["col"])) for r in probe)
+        t = SS.collect_capped(
+            docs.select(F.col(id_col).cast("long").alias("doc_id")),
+            _DRIVER_CLUSTERS_DOCS,
+        )
+        ids = None if t is None else t.column("doc_id").to_pylist()
+        if ids is not None and not any(i is None for i in ids):
             from collections import Counter
 
             import pyarrow as pa
 
-            lab = driver_union_find(
-                (int(r["row"]), int(r["col"])) for r in probe
-            )
             cl = [lab.get(i, i) for i in ids]
             sizes = Counter(cl)
             return spark.createDataFrame(pa.table({
@@ -327,12 +325,7 @@ def dedup_clusters(
                 "is_canonical": pa.array(
                     [int(i == c) for i, c in zip(ids, cl)], pa.int32()),
             }))
-        labels = spark.createDataFrame(
-            list(driver_union_find(
-                (int(r["row"]), int(r["col"])) for r in probe
-            ).items()),
-            "node long, label long",
-        )
+        labels = labels_frame(spark, lab)
     else:
         labels = connected_components(
             coo.select("row", "col")
@@ -1192,8 +1185,70 @@ def _guard_state_meta(spark, state_path: str, op: str, params: dict) -> bool:
     return True
 
 
-def _write_state_meta(spark, state_path: str, params: dict) -> None:
-    SS.write_meta(state_path, params)
+def _adopt_state_format(spark, state_path: str, op: str, params: dict,
+                        registry: str, migrate,
+                        migrate_always: bool = False) -> bool:
+    """Format adoption shared by the state ingests (driver twins and
+    distributed impls alike): :func:`_guard_state_meta`, then
+    ``migrate(spark, state_path)`` — on every call, or only for a state
+    without a meta sidecar — then the adoption warning when a legacy
+    state (``registry`` store written, no sidecar) takes this call's
+    parameters as its FORMAT. Returns whether the sidecar existed."""
+    import warnings
+
+    had_meta = _guard_state_meta(spark, state_path, op, params)
+    if migrate_always or not had_meta:
+        migrate(spark, state_path)
+    if not had_meta and SS.store_exists(state_path + "/" + registry):
+        shown = ", ".join(f"{k}={v}" for k, v in params.items())
+        warnings.warn(
+            f"{op}: adopting this call's format parameters ({shown}) for "
+            f"the legacy state at {state_path} — they become the state "
+            f"FORMAT and every later ingest must match",
+            stacklevel=4,
+        )
+    return had_meta
+
+
+def _resolved_frame(spark, tbl, read_back) -> DataFrame:
+    """A driver-resolved Arrow table as the ingest's answer: up to
+    :data:`_DRIVER_RESOLVE_ROWS` rows it returns as an Arrow-backed
+    local relation (no scheduled job; it survives state compaction or
+    deletion by construction — the rows are in the plan); a larger
+    resolve runs ``read_back()`` (the Spark resolve over the committed
+    stores) and checkpoints it."""
+    if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
+        return spark.createDataFrame(tbl)
+    return read_back().localCheckpoint(eager=True)
+
+
+def _driver_relabel(edges: list, new_ids: list, ov_ids: list,
+                    ov_labels: list):
+    """Driver rendering of the touched-component solve shared by the
+    MinHash and semantic ingests. Components TOUCHED by a new edge are
+    the current labels (min over the overlay rows) of the edges' OLD
+    endpoints; overlay rows carrying a touched label are exactly those
+    components' members (labels strictly decrease, so a stale label
+    never equals a live one). Each member's star edge id→label
+    contracts its component into its hub, and
+    :func:`solvers.driver_union_find` over new edges ∪ star edges gives
+    the component-minimum labels. Returns (labels, indices of the
+    overlay rows whose label changed)."""
+    from raft_spark.operators.solvers import driver_union_find
+
+    ends = {i for e in edges for i in e} - set(new_ids)
+    cur: dict = {}
+    for i, c in zip(ov_ids, ov_labels):
+        if i in ends and (i not in cur or c < cur[i]):
+            cur[i] = c
+    touched = set(cur.values())
+    members = [k for k, c in enumerate(ov_labels) if c in touched]
+    labels = driver_union_find(edges + [
+        (ov_ids[k], ov_labels[k]) for k in members
+        if ov_ids[k] != ov_labels[k]
+    ])
+    return labels, [k for k in members if ov_ids[k] in labels
+                    and labels[ov_ids[k]] != ov_labels[k]]
 
 
 def _migrate_dedup_state(spark, state_path: str, num_perms: int,
@@ -1333,25 +1388,13 @@ def dedup_state_ingest(
     return_full: bool = True,
 ) -> DataFrame:
     """Cross-snapshot incremental dedup — full contract on
-    :func:`_dedup_state_ingest_impl` (shared ``__doc__``). This wrapper
-    only guarantees the session's AQE flag is restored even when a
-    delivery dies mid-ingest (the crash-injection contract raises
-    between store appends by design; the conf must not leak)."""
-    spark = new_docs.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        out = _dedup_state_ingest_driver(
-            new_docs, state_path, text_col, id_col, threshold, num_perms,
-            band_rows, max_bucket_docs, return_full,
-        )
-        if out is not None:
-            return out
-        return _dedup_state_ingest_impl(
-            new_docs, state_path, text_col, id_col, threshold, num_perms,
-            band_rows, max_bucket_docs, return_full,
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    :func:`_dedup_state_ingest_impl`. A small delivery into a
+    driver-sized state takes :func:`_dedup_state_ingest_driver`; the
+    rest run the distributed impl."""
+    args = (new_docs, state_path, text_col, id_col, threshold, num_perms,
+            band_rows, max_bucket_docs, return_full)
+    out = _dedup_state_ingest_driver(*args)
+    return out if out is not None else _dedup_state_ingest_impl(*args)
 
 
 # driver-rendered ingest cap: deliveries above this many docs (or any
@@ -1411,34 +1454,24 @@ def resolve_dedup_state_rows(spark, state_path: str) -> list[tuple] | None:
         return None
     if SS.store_row_count(store) >= SS.SMALL_STORE_ROWS:
         return None
-    committed = SS.committed_ids(spark, state_path)
-    ov = SS.read_store_arrow(store, committed,
-                             columns=["doc_id", "cluster_id"])
-    pairs = (
-        zip(ov.column("doc_id").to_pylist(),
-            ov.column("cluster_id").to_pylist())
-        if ov is not None else []
-    )
-    t = _resolved_rows_table(pairs)
-    return list(zip(
-        t.column("doc_id").to_pylist(), t.column("cluster_id").to_pylist(),
-        t.column("cluster_size").to_pylist(),
-        t.column("is_canonical").to_pylist(),
-    ))
+    t = _resolved_rows_table(zip(*SS.read_store_columns(
+        store, SS.committed_ids(spark, state_path), ["doc_id", "cluster_id"]
+    )))
+    return list(zip(*(c.to_pylist() for c in t.columns)))
 
 
 def _resolve_state_clusters(spark, state_path: str, ids) -> DataFrame:
-    """Full-corpus resolve from a FRESH post-append scan of the clusters
-    store restricted to ``ids`` (committed + the delivery just
-    published); checkpointed so the caller's frame survives state
-    compaction or deletion underneath it."""
+    """Full-corpus resolve from a FRESH scan of the clusters store
+    restricted to ``ids`` (committed, plus the delivery just published).
+    Callers checkpoint it so their frame survives state compaction or
+    deletion underneath it."""
     return _resolve_cluster_overlay(
         SS.visible(
             spark.read.schema(_CLUSTERS_SCHEMA)
             .parquet(state_path + "/clusters"),
             ids,
         ).select("doc_id", "cluster_id")
-    ).localCheckpoint(eager=True)
+    )
 
 
 def _dedup_state_ingest_driver(
@@ -1463,53 +1496,37 @@ def _dedup_state_ingest_driver(
     job over a few KB (measured ~25 jobs ≈ 10 s per ingest at sf0.1,
     ~70 for the two-delivery gate query). The irreducible Spark work is
     the signature/banding computation, so this path runs exactly ONE
-    job — a capped ``limit(cap+1)`` collect of the delta's
-    (doc_id, sig, _pd, bands[band, bsig, _pb]) rows, every derived
-    value computed by the SAME Spark expressions as the distributed
-    path (zero hash/signature divergence by construction) — and renders
-    the probes, the additive hot-bucket cap, the candidate bucket join,
-    the est-Jaccard filter, the touched-component star contraction and
-    the union-find label solve (:func:`solvers.driver_union_find` — the
-    identical component-minimum labels) in plain Python over the
-    collected rows plus pruned pyarrow reads of the stores
-    (:func:`statestore.read_store_arrow` — the same ``_dv``-committed /
-    ``_pd``/``_pb`` IN-list pruning as the Spark scans). Appends go
-    through the SAME :func:`statestore.append_store` seam (as Arrow
-    tables) in the same order, so the manifest-commit crash discipline
-    and the crash-injection tests' window semantics are unchanged.
-    Store parity with the distributed path is pinned in
+    job — a capped collect (:func:`statestore.collect_capped`) of the
+    delta's (doc_id, sig, _pd, bands[band, bsig, _pb]) rows, every
+    derived value computed by the SAME Spark expressions as the
+    distributed path (zero hash/signature divergence by construction)
+    — and renders the probes, the additive hot-bucket cap, the
+    candidate bucket join, the est-Jaccard filter, the touched-component
+    star contraction and the union-find label solve
+    (:func:`_driver_relabel` — the identical component-minimum labels)
+    in plain Python over the collected rows plus pruned pyarrow reads of
+    the stores (:func:`statestore.read_store_arrow` — the same
+    ``_dv``-committed / ``_pd``/``_pb`` IN-list pruning as the Spark
+    scans). Appends go through the SAME :func:`statestore.append_store`
+    seam (as Arrow tables, :func:`statestore.commit_delivery`) in the
+    same order, so the manifest-commit crash discipline and the
+    crash-injection tests' window semantics are unchanged. Store parity
+    with the distributed path is pinned in
     tests/test_incremental_dedup.py (driver vs forced-distributed
     ingest: identical store rows, identical resolve)."""
-    import warnings
-
     spark = new_docs.sparkSession
     stores = ("sigs", "bands", "occ", "clusters")
-    # feasibility gates, cheapest first (all driver-side, no jobs):
-    # every store must be driver-sized — the pruned reads below are
-    # bounded by store size, and at corpus scale the distributed path's
-    # partition-pruned scans are the right tool
-    for s in stores:
-        if SS.store_row_count(state_path + "/" + s) >= SS.SMALL_STORE_ROWS:
-            return None
-    present = {s: os.path.isdir(state_path + "/" + s) for s in stores}
-    if len({present["sigs"], present["bands"], present["occ"]}) > 1:
-        return None  # mid-migration shape — let the distributed path sort it out
-    had_meta = _guard_state_meta(
-        spark, state_path, "dedup_state_ingest",
-        {"num_perms": num_perms, "band_rows": band_rows,
-         "max_bucket_docs": max_bucket_docs},
+    present = SS.driver_state_gate(state_path, stores,
+                                   ("sigs", "bands", "occ"))
+    if present is None:
+        return None
+    params = {"num_perms": num_perms, "band_rows": band_rows,
+              "max_bucket_docs": max_bucket_docs}
+    had_meta = _adopt_state_format(
+        spark, state_path, "dedup_state_ingest", params, "sigs",
+        lambda sp, p: _migrate_dedup_state(sp, p, num_perms, band_rows),
     )
-    if not had_meta:
-        _migrate_dedup_state(spark, state_path, num_perms, band_rows)
-        if SS.store_exists(state_path + "/sigs"):
-            warnings.warn(
-                f"dedup_state_ingest: adopting this call's format "
-                f"parameters (num_perms={num_perms}, band_rows="
-                f"{band_rows}, max_bucket_docs={max_bucket_docs}) for "
-                f"the legacy state at {state_path} — they become the "
-                f"state FORMAT and every later ingest must match",
-                stacklevel=3,
-            )
+    if not had_meta:  # the migration may have backfilled bands/occ
         present = {s: os.path.isdir(state_path + "/" + s) for s in stores}
     committed = SS.adopt_commit_ledger(spark, state_path, stores)
 
@@ -1534,9 +1551,8 @@ def _dedup_state_ingest_driver(
         F.col(id_col).cast("long").alias("doc_id"),
         minhash_signature_stable(text_col, num_perms).alias("sig"),
     ).select("doc_id", "sig", pd_expr, bands_expr)
-    with _no_aqe(spark, limit_rows=DRIVER_DELTA_DOCS):
-        t = row_df.limit(DRIVER_DELTA_DOCS + 1).toArrow()
-    if t.num_rows > DRIVER_DELTA_DOCS:
+    t = SS.collect_capped(row_df, DRIVER_DELTA_DOCS)
+    if t is None:
         return None  # large delivery — distributed path (probe cost is O(cap))
     doc_ids = t.column("doc_id").to_pylist()
     if any(d is None for d in doc_ids) or len(set(doc_ids)) != len(doc_ids):
@@ -1544,54 +1560,34 @@ def _dedup_state_ingest_driver(
         # join multiplicities are the contract for that malformed shape
         return None
 
-    # replay anti-join, pruned to the delta ids' _pd directories
-    if present["sigs"]:
-        pds = sorted({v for v in t.column("_pd").to_pylist()})
-        old_ids = SS.read_store_arrow(
-            state_path + "/sigs", committed, "_pd", pds, columns=["doc_id"]
-        )
-        if old_ids is not None:
-            seen = set(old_ids.column("doc_id").to_pylist())
-            if seen:
-                keep_idx = [i for i, d in enumerate(doc_ids) if d not in seen]
-                if len(keep_idx) < len(doc_ids):
-                    import pyarrow as _pa
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-                    t = t.take(_pa.array(keep_idx, _pa.int64()))
-                    doc_ids = t.column("doc_id").to_pylist()
+    # replay anti-join, pruned to the delta ids' _pd directories
+    keep = SS.replay_keep(state_path + "/sigs", committed, doc_ids,
+                          "doc_id", "_pd", set(t.column("_pd").to_pylist()))
+    if keep is not None:
+        t = t.take(pa.array(keep, pa.int64()))
+        doc_ids = t.column("doc_id").to_pylist()
     n_delta = t.num_rows
 
     if present["sigs"] and n_delta == 0:
         # pure replay (or an empty batch) — no state change
-        if return_full and present["clusters"]:
-            ovr = SS.read_store_arrow(
-                state_path + "/clusters", committed,
-                columns=["doc_id", "cluster_id"],
-            )
-            tbl = _resolved_rows_table(
-                zip(ovr.column("doc_id").to_pylist(),
-                    ovr.column("cluster_id").to_pylist())
-                if ovr is not None else []
-            )
-            if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
-                return spark.createDataFrame(tbl)
-            return _resolve_cluster_overlay(
-                SS.visible(
-                    _try_parquet(spark, state_path + "/clusters",
-                                 _CLUSTERS_SCHEMA),
-                    committed,
-                ).select("doc_id", "cluster_id")
-            ).localCheckpoint(eager=True)
-        if return_full:
+        if not return_full:
+            return spark.createDataFrame([], "doc_id long, cluster_id long")
+        if not present["clusters"]:
             return spark.createDataFrame(
                 [], "doc_id long, cluster_id long, cluster_size long, is_canonical int"
             )
-        return spark.createDataFrame([], "doc_id long, cluster_id long")
+        return _resolved_frame(
+            spark,
+            _resolved_rows_table(zip(*SS.read_store_columns(
+                state_path + "/clusters", committed, ["doc_id", "cluster_id"]
+            ))),
+            lambda: _resolve_state_clusters(spark, state_path, committed),
+        )
 
     # band rows of the delta (explode the collected structs)
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     bands_col = t.column("_bands")
     if isinstance(bands_col, pa.ChunkedArray):
         bands_col = bands_col.combine_chunks()
@@ -1607,24 +1603,13 @@ def _dedup_state_ingest_driver(
     from collections import Counter, defaultdict
 
     cnt_new = Counter(zip(band_l, bsig_l))
-    key_pb = {}
-    for b, s_, p in zip(band_l, bsig_l, pb_l):
-        key_pb[(b, s_)] = p
+    key_pb = dict(zip(zip(band_l, bsig_l), pb_l))
     pbs = sorted(set(pb_l))
     old_n: Counter = Counter()
-    if present["occ"]:
-        occ_t = SS.read_store_arrow(
-            state_path + "/occ", committed, "_pb", pbs,
-            columns=["band", "bsig", "n"],
-        )
-        if occ_t is not None:
-            for b, s_, n_ in zip(
-                occ_t.column("band").to_pylist(),
-                occ_t.column("bsig").to_pylist(),
-                occ_t.column("n").to_pylist(),
-            ):
-                if (b, s_) in cnt_new:
-                    old_n[(b, s_)] += n_
+    for b, s_, n_ in zip(*SS.read_store_columns(
+            state_path + "/occ", committed, ["band", "bsig", "n"], "_pb", pbs)):
+        if (b, s_) in cnt_new:
+            old_n[(b, s_)] += n_
     keep_keys = {
         k for k, c in cnt_new.items() if c + old_n.get(k, 0) <= max_bucket_docs
     }
@@ -1636,20 +1621,11 @@ def _dedup_state_ingest_driver(
         if (b, s_) in keep_keys:
             new_by_key[(b, s_)].append(d)
     corpus_by_key = {k: list(v) for k, v in new_by_key.items()}
-    if present["bands"]:
-        bt = SS.read_store_arrow(
-            state_path + "/bands", committed, "_pb", pbs,
-            columns=["band", "bsig", "doc_id"],
-        )
-        if bt is not None:
-            for b, s_, d in zip(
-                bt.column("band").to_pylist(),
-                bt.column("bsig").to_pylist(),
-                bt.column("doc_id").to_pylist(),
-            ):
-                k = (b, s_)
-                if k in new_by_key:  # kept AND shared with the delta
-                    corpus_by_key[k].append(d)
+    for b, s_, d in zip(*SS.read_store_columns(
+            state_path + "/bands", committed, ["band", "bsig", "doc_id"],
+            "_pb", pbs)):
+        if (b, s_) in new_by_key:  # kept AND shared with the delta
+            corpus_by_key[(b, s_)].append(d)
     cand: set = set()
     for k, newids in new_by_key.items():
         corp = corpus_by_key[k]
@@ -1664,17 +1640,15 @@ def _dedup_state_ingest_driver(
     # a membership-filtered read of the persisted sigs)
     sig_by_id = dict(zip(doc_ids, t.column("sig").to_pylist()))
     need_old = sorted({i for p_ in cand for i in p_ if i not in sig_by_id})
-    if need_old and present["sigs"]:
-        st = SS.read_store_arrow(
-            state_path + "/sigs", committed, columns=["doc_id", "sig"],
+    if need_old:
+        got, got_sigs = SS.read_store_columns(
+            state_path + "/sigs", committed, ["doc_id", "sig"],
             filter_in=("doc_id", need_old),
         )
-        if st is not None:
-            got = st.column("doc_id").to_pylist()
-            if len(set(got)) != len(got):
-                return None  # historical duplicate sig rows: join
-                # multiplicity belongs to the distributed path
-            sig_by_id.update(zip(got, st.column("sig").to_pylist()))
+        if len(set(got)) != len(got):
+            return None  # historical duplicate sig rows: join
+            # multiplicity belongs to the distributed path
+        sig_by_id.update(zip(got, got_sigs))
     edges = []
     for a, b in cand:
         sa = sig_by_id.get(a)
@@ -1690,108 +1664,50 @@ def _dedup_state_ingest_driver(
         if matches / float(num_perms) >= threshold:
             edges.append((a, b))
 
-    # touched components: star-contract every component an edge reaches
-    members = None
-    pairs = edges
-    ov_doc: list = []
-    ov_lab: list = []
-    if present["clusters"]:
-        ov = SS.read_store_arrow(
-            state_path + "/clusters", committed,
-            columns=["doc_id", "cluster_id"],
-        )
-        if ov is not None:
-            ov_doc = ov.column("doc_id").to_pylist()
-            ov_lab = ov.column("cluster_id").to_pylist()
-        new_idset = set(doc_ids)
-        ends = {i for e in edges for i in e} - new_idset
-        min_lab: dict = {}
-        for d, c in zip(ov_doc, ov_lab):
-            if d in ends and (d not in min_lab or c < min_lab[d]):
-                min_lab[d] = c
-        touched = set(min_lab.values())
-        members = [
-            (d, c) for d, c in zip(ov_doc, ov_lab) if c in touched
-        ]
-        star = [(d, c) for d, c in members if d != c]
-        pairs = edges + star
+    ov_doc, ov_lab = SS.read_store_columns(
+        state_path + "/clusters", committed, ["doc_id", "cluster_id"]
+    )
+    labels, relabeled = _driver_relabel(edges, doc_ids, ov_doc, ov_lab)
+    delta_overlay = [(d, labels.get(d, d)) for d in doc_ids] \
+        + [(ov_doc[k], labels[ov_doc[k]]) for k in relabeled]
 
-    from raft_spark.operators.solvers import driver_union_find
-
-    labels = driver_union_find(pairs)
-    new_rows = [(d, labels.get(d, d)) for d in doc_ids]
-    if members is not None:
-        relabeled = [
-            (d, labels[d]) for d, old_c in members
-            if d in labels and labels[d] != old_c
-        ]
-        delta_overlay = new_rows + relabeled
-    else:
-        delta_overlay = new_rows
-
-    if not had_meta:
-        # meta BEFORE the appends (not between them): a crash here
-        # leaves a meta-only state ≡ bootstrap with the format pinned
-        _write_state_meta(spark, state_path, {
-            "num_perms": int(num_perms), "band_rows": int(band_rows),
-            "max_bucket_docs": int(max_bucket_docs),
-        })
     # manifest commit: same append order and same append_store seam as
     # the distributed path (sigs, bands, occ, clusters; publish LAST)
-    dv = SS.new_delivery_id()
-    dv_arr = pa.array([dv] * n_delta, pa.int64())
-    sigs_tbl = pa.table({
-        "_dv": dv_arr, "_pd": t.column("_pd"),
-        "doc_id": t.column("doc_id"), "sig": t.column("sig"),
-    })
-    SS.append_store(sigs_tbl, state_path + "/sigs", ("_dv", "_pd"),
-                    small=True)
-    n_bands_rows = len(band_l)
-    bands_tbl = pa.table({
-        "_dv": pa.array([dv] * n_bands_rows, pa.int64()),
-        "_pb": flat.field("_pb"),
-        "band": flat.field("band"), "bsig": flat.field("bsig"),
-        "doc_id": pa.array(bdoc_l, pa.int64()),
-    })
-    SS.append_store(bands_tbl, state_path + "/bands", ("_dv", "_pb"),
-                    small=True, sort_by=("band", "bsig"))
     occ_keys = sorted(cnt_new)
-    occ_tbl = pa.table({
-        "_dv": pa.array([dv] * len(occ_keys), pa.int64()),
-        "_pb": pa.array([key_pb[k] for k in occ_keys], pa.int32()),
-        "band": pa.array([k[0] for k in occ_keys], pa.int32()),
-        "bsig": pa.array([k[1] for k in occ_keys], pa.string()),
-        "n": pa.array([cnt_new[k] for k in occ_keys], pa.int64()),
-    })
-    SS.append_store(occ_tbl, state_path + "/occ", ("_dv", "_pb"),
-                    small=True)
-    clusters_tbl = pa.table({
-        "_dv": pa.array([dv] * len(delta_overlay), pa.int64()),
-        "doc_id": pa.array([d for d, _ in delta_overlay], pa.int64()),
-        "cluster_id": pa.array([c for _, c in delta_overlay], pa.int64()),
-    })
-    SS.append_store(clusters_tbl, state_path + "/clusters", ("_dv",),
-                    small=True)
-    SS.publish_commit(spark, state_path, dv)  # THE commit point
+    dv = SS.commit_delivery(spark, state_path, [
+        ("sigs", {"_pd": t.column("_pd"), "doc_id": t.column("doc_id"),
+                  "sig": t.column("sig")}, ("_pd",), ()),
+        ("bands", {"_pb": flat.field("_pb"), "band": flat.field("band"),
+                   "bsig": flat.field("bsig"),
+                   "doc_id": pa.array(bdoc_l, pa.int64())},
+         ("_pb",), ("band", "bsig")),
+        ("occ", {"_pb": pa.array([key_pb[k] for k in occ_keys], pa.int32()),
+                 "band": pa.array([k[0] for k in occ_keys], pa.int32()),
+                 "bsig": pa.array([k[1] for k in occ_keys], pa.string()),
+                 "n": pa.array([cnt_new[k] for k in occ_keys], pa.int64())},
+         ("_pb",), ()),
+        ("clusters",
+         {"doc_id": pa.array([d for d, _ in delta_overlay], pa.int64()),
+          "cluster_id": pa.array([c for _, c in delta_overlay], pa.int64())},
+         (), ()),
+    ], meta=None if had_meta else {k: int(v) for k, v in params.items()})
 
     if not return_full:
         return spark.createDataFrame(
             delta_overlay or [], "doc_id long, cluster_id long"
         )
     # driver-side resolve: the refreshed overlay is exactly the
-    # committed rows read above + this delivery — no read-back scan.
-    # Large resolves (overlay near the store gate) read back through
-    # Spark; up to _DRIVER_RESOLVE_ROWS they return as an Arrow-backed
-    # local relation with zero scheduled jobs (it survives state
-    # compaction/deletion by construction — the rows are in the plan).
+    # committed rows read above + this delivery — no read-back scan
     import itertools
 
-    tbl = _resolved_rows_table(
-        itertools.chain(zip(ov_doc, ov_lab), delta_overlay)
+    return _resolved_frame(
+        spark,
+        _resolved_rows_table(
+            itertools.chain(zip(ov_doc, ov_lab), delta_overlay)
+        ),
+        lambda: _resolve_state_clusters(
+            spark, state_path, (committed or []) + [dv]),
     )
-    if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
-        return spark.createDataFrame(tbl)
-    return _resolve_state_clusters(spark, state_path, (committed or []) + [dv])
 
 
 def _dedup_state_ingest_impl(
@@ -1898,25 +1814,15 @@ def _dedup_state_ingest_impl(
     meta-only state, which is exactly a bootstrap state with its
     format parameters pinned — benign by construction.
     """
-    import warnings
-
     spark = new_docs.sparkSession
-    had_meta = _guard_state_meta(
-        spark, state_path, "dedup_state_ingest",
-        {"num_perms": num_perms, "band_rows": band_rows,
-         "max_bucket_docs": max_bucket_docs},
+    params = {"num_perms": num_perms, "band_rows": band_rows,
+              "max_bucket_docs": max_bucket_docs}
+    # a meta sidecar implies the r11 layout already, so only a state
+    # without one migrates
+    had_meta = _adopt_state_format(
+        spark, state_path, "dedup_state_ingest", params, "sigs",
+        lambda sp, p: _migrate_dedup_state(sp, p, num_perms, band_rows),
     )
-    if not had_meta:  # a meta sidecar implies the r11 layout already
-        _migrate_dedup_state(spark, state_path, num_perms, band_rows)
-        if _try_parquet(spark, state_path + "/sigs") is not None:
-            warnings.warn(
-                f"dedup_state_ingest: adopting this call's format "
-                f"parameters (num_perms={num_perms}, band_rows="
-                f"{band_rows}, max_bucket_docs={max_bucket_docs}) for "
-                f"the legacy state at {state_path} — they become the "
-                f"state FORMAT and every later ingest must match",
-                stacklevel=2,
-            )
     committed = SS.adopt_commit_ledger(
         spark, state_path, ("sigs", "bands", "occ", "clusters")
     )
@@ -1975,233 +1881,227 @@ def _dedup_state_ingest_impl(
     # is not broadcastable).
     small_delta = n_delta < 1_000_000
     bcast = F.broadcast if small_delta else (lambda df_: df_)
-    if small_delta:
-        # AQE off for the delta-bounded probe section (through the
-        # appends; restored before the corpus-scale resolve, and by the
-        # public wrapper on any exit): every AQE stage materialization
-        # is a scheduled job, so a 3-shuffle probe over a few-KB delta
-        # costs 4-5 jobs instead of 1 — and at this measured delivery
-        # size none of AQE's services apply (nothing to coalesce below
-        # the advisory size, joins explicitly broadcast-hinted, nothing
-        # to skew-split). Gated on delta size, not local mode: a 50k
-        # delivery into a 10B-doc corpus takes the same branch.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # narrow the checkpointed delta for its MANY downstream scans:
-        # the signature compute above ran at full parallelism, but every
-        # later stage over `incoming` is trivial per row, and with AQE
-        # off each would otherwise launch one task per inherited
-        # partition. coalesce after the checkpoint is a narrow view of
-        # the cached partitions — no extra job, no recompute.
-        incoming = incoming.coalesce(8)
+    # AQE off for the delta-bounded probe section (through the appends;
+    # the scope restores it for the corpus-scale resolve below, and on
+    # any exit): every AQE stage materialization is a scheduled job, so
+    # a 3-shuffle probe over a few-KB delta costs 4-5 jobs instead of 1
+    # — and at this measured delivery size none of AQE's services apply
+    # (nothing to coalesce below the advisory size, joins explicitly
+    # broadcast-hinted, nothing to skew-split). Gated on delta size, not
+    # local mode: a 50k delivery into a 10B-doc corpus takes the same
+    # branch.
+    with _no_aqe(spark, enabled=small_delta):
+        if small_delta:
+            # narrow the checkpointed delta for its MANY downstream scans:
+            # the signature compute above ran at full parallelism, but every
+            # later stage over `incoming` is trivial per row, and with AQE
+            # off each would otherwise launch one task per inherited
+            # partition. coalesce after the checkpoint is a narrow view of
+            # the cached partitions — no extra job, no recompute.
+            incoming = incoming.coalesce(8)
 
-    nb = (
-        _explode_bands(incoming, num_perms, band_rows)
-        .withColumn("_pb", _band_bucket(F.col("band"), F.col("bsig")))
-        .localCheckpoint(eager=True)  # delta-sized; probed four ways below
-    )
-    nb_counts = nb.groupBy("_pb", "band", "bsig").agg(
-        F.count("*").alias("_n_new")
-    ).localCheckpoint(eager=True)
-
-    # hot-bucket cap on the UNION occupancy — the from-scratch decision,
-    # reproduced ADDITIVELY: persisted per-delivery counts (pruned to the
-    # delta's directory buckets, then to its exact bucket keys) + the
-    # delta's own counts. No corpus-wide aggregation.
-    old_occ = SS.visible(_try_parquet(spark, state_path + "/occ", _OCC_SCHEMA),
-                         committed)
-    if old_occ is not None:
-        pbs = sorted(r["_pb"] for r in nb_counts.select("_pb").distinct().collect())
-        old_for_delta = (
-            old_occ.where(F.col("_pb").isin(pbs))  # partition filter, ≤32 values
-            .join(bcast(nb_counts.select("band", "bsig")),
-                  ["band", "bsig"], "left_semi")
-            .groupBy("band", "bsig")
-            .agg(F.sum("n").alias("_n_old"))
+        nb = (
+            _explode_bands(incoming, num_perms, band_rows)
+            .withColumn("_pb", _band_bucket(F.col("band"), F.col("bsig")))
+            .localCheckpoint(eager=True)  # delta-sized; probed four ways below
         )
-        occ_union = nb_counts.join(bcast(old_for_delta),
-                                   ["band", "bsig"], "left").select(
-            "band", "bsig",
-            (F.col("_n_new") + F.coalesce(F.col("_n_old"), F.lit(0))).alias("_n"),
-        )
-    else:
-        pbs = None
-        occ_union = nb_counts.select("band", "bsig", F.col("_n_new").alias("_n"))
-    keep = occ_union.filter(F.col("_n") <= max_bucket_docs).select("band", "bsig")
+        nb_counts = nb.groupBy("_pb", "band", "bsig").agg(
+            F.count("*").alias("_n_new")
+        ).localCheckpoint(eager=True)
 
-    # candidate probe: delta bands × (pruned corpus bands ∪ delta bands),
-    # both sides restricted to kept buckets; the bucket key is the join
-    # key so one semi-join per side enforces the cap on both endpoints
-    corpus_bands = nb.select("band", "bsig", "doc_id")
-    old_bands = SS.visible(
-        _try_parquet(spark, state_path + "/bands", _BANDS_SCHEMA), committed
-    )
-    if old_bands is not None:
-        corpus_bands = corpus_bands.unionByName(
-            old_bands.where(F.col("_pb").isin(pbs)).select("band", "bsig", "doc_id")
-        )
-    # keep is delta-bounded (≤ the delta's distinct bucket keys) — the
-    # hint saves shuffling the PRUNED-CORPUS band side for the cap
-    # semi-join, the largest exchange of the probe
-    nbk = nb.join(bcast(keep), ["band", "bsig"], "left_semi")
-    cbk = corpus_bands.join(bcast(keep), ["band", "bsig"], "left_semi")
-    cand = (
-        bcast(nbk.select(F.col("doc_id").alias("_x"), "band", "bsig"))
-        .join(cbk.select(F.col("doc_id").alias("_y"), "band", "bsig"),
-              ["band", "bsig"])
-        .filter(F.col("_x") != F.col("_y"))
-        .select(F.least("_x", "_y").alias("a"), F.greatest("_x", "_y").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)  # delta-bounded (hot-bucket cap);
-        # materialized so the sig lookup below can prune to its ids
-    )
-    if old_sigs is not None:
-        # est-Jaccard signature lookup pruned to the candidate ids' _pd
-        # directories — the candidate set is delta-bounded, so the
-        # IN-list stays ≤N_BAND_BUCKETS and the corpus signature table
-        # is never scanned end-to-end
-        cpds = sorted({
-            r[0] for r in cand.select(
-                F.explode(F.array(
-                    _doc_bucket(F.col("a")), _doc_bucket(F.col("b"))
-                )).alias("_pd")
-            ).distinct().collect()
-        })
-        sig_lookup = (
-            old_sigs.where(F.col("_pd").isin(cpds)).select("doc_id", "sig")
-            if cpds else old_sigs.limit(0).select("doc_id", "sig")
-        ).unionByName(incoming)
-    else:
-        sig_lookup = incoming
-    sa = sig_lookup.select(F.col("doc_id").alias("a"), F.col("sig").alias("_sa"))
-    sb = sig_lookup.select(F.col("doc_id").alias("b"), F.col("sig").alias("_sb"))
-    est = F.aggregate(
-        F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(float(num_perms))
-    # cand (and the half-joined intermediate) are delta-bounded:
-    # broadcasting them keeps both signature lookups (pruned corpus
-    # scans) shuffle-free
-    half = sa.join(bcast(cand), "a")
-    edges = (
-        sb.join(bcast(half), "b")
-        .filter(est >= F.lit(threshold))
-        .select("a", "b")
-        .localCheckpoint(eager=True)  # delta-sized; reused 3× below
-    )
+        # hot-bucket cap on the UNION occupancy — the from-scratch decision,
+        # reproduced ADDITIVELY: persisted per-delivery counts (pruned to the
+        # delta's directory buckets, then to its exact bucket keys) + the
+        # delta's own counts. No corpus-wide aggregation.
+        old_occ = SS.visible(_try_parquet(spark, state_path + "/occ", _OCC_SCHEMA),
+                             committed)
+        if old_occ is not None:
+            pbs = sorted(r["_pb"] for r in nb_counts.select("_pb").distinct().collect())
+            old_for_delta = (
+                old_occ.where(F.col("_pb").isin(pbs))  # partition filter, ≤32 values
+                .join(bcast(nb_counts.select("band", "bsig")),
+                      ["band", "bsig"], "left_semi")
+                .groupBy("band", "bsig")
+                .agg(F.sum("n").alias("_n_old"))
+            )
+            occ_union = nb_counts.join(bcast(old_for_delta),
+                                       ["band", "bsig"], "left").select(
+                "band", "bsig",
+                (F.col("_n_new") + F.coalesce(F.col("_n_old"), F.lit(0))).alias("_n"),
+            )
+        else:
+            pbs = None
+            occ_union = nb_counts.select("band", "bsig", F.col("_n_new").alias("_n"))
+        keep = occ_union.filter(F.col("_n") <= max_bucket_docs).select("band", "bsig")
 
-    if overlay is not None:
-        # components TOUCHED by a new edge: the current labels of the
-        # edges' old endpoints (new→old edges are the only way in —
-        # cand's _x side is always a new doc). Their members' star
-        # edges contract each touched component into its hub; untouched
-        # components never enter the solve and never get rewritten.
-        new_ids = incoming.select("doc_id")
-        ends = (
-            edges.select(F.col("a").alias("doc_id"))
-            .unionByName(edges.select(F.col("b").alias("doc_id")))
+        # candidate probe: delta bands × (pruned corpus bands ∪ delta bands),
+        # both sides restricted to kept buckets; the bucket key is the join
+        # key so one semi-join per side enforces the cap on both endpoints
+        corpus_bands = nb.select("band", "bsig", "doc_id")
+        old_bands = SS.visible(
+            _try_parquet(spark, state_path + "/bands", _BANDS_SCHEMA), committed
+        )
+        if old_bands is not None:
+            corpus_bands = corpus_bands.unionByName(
+                old_bands.where(F.col("_pb").isin(pbs)).select("band", "bsig", "doc_id")
+            )
+        # keep is delta-bounded (≤ the delta's distinct bucket keys) — the
+        # hint saves shuffling the PRUNED-CORPUS band side for the cap
+        # semi-join, the largest exchange of the probe
+        nbk = nb.join(bcast(keep), ["band", "bsig"], "left_semi")
+        cbk = corpus_bands.join(bcast(keep), ["band", "bsig"], "left_semi")
+        cand = (
+            bcast(nbk.select(F.col("doc_id").alias("_x"), "band", "bsig"))
+            .join(cbk.select(F.col("doc_id").alias("_y"), "band", "bsig"),
+                  ["band", "bsig"])
+            .filter(F.col("_x") != F.col("_y"))
+            .select(F.least("_x", "_y").alias("a"), F.greatest("_x", "_y").alias("b"))
             .distinct()
-            .join(new_ids, "doc_id", "left_anti")
+            .localCheckpoint(eager=True)  # delta-bounded (hot-bucket cap);
+            # materialized so the sig lookup below can prune to its ids
         )
-        # ends/touched are delta-bounded (edge endpoints / their
-        # labels); broadcasting them keeps the CORPUS-SCALE overlay
-        # store unshuffled through both membership probes — at 100 TB
-        # these two joins are the only corpus-sized inputs in the
-        # probe window
-        touched = (
-            overlay.join(bcast(ends), "doc_id", "left_semi")
-            .groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
-            .select("cluster_id").distinct()
+        if old_sigs is not None:
+            # est-Jaccard signature lookup pruned to the candidate ids' _pd
+            # directories — the candidate set is delta-bounded, so the
+            # IN-list stays ≤N_BAND_BUCKETS and the corpus signature table
+            # is never scanned end-to-end
+            cpds = sorted({
+                r[0] for r in cand.select(
+                    F.explode(F.array(
+                        _doc_bucket(F.col("a")), _doc_bucket(F.col("b"))
+                    )).alias("_pd")
+                ).distinct().collect()
+            })
+            sig_lookup = (
+                old_sigs.where(F.col("_pd").isin(cpds)).select("doc_id", "sig")
+                if cpds else old_sigs.limit(0).select("doc_id", "sig")
+            ).unionByName(incoming)
+        else:
+            sig_lookup = incoming
+        sa = sig_lookup.select(F.col("doc_id").alias("a"), F.col("sig").alias("_sa"))
+        sb = sig_lookup.select(F.col("doc_id").alias("b"), F.col("sig").alias("_sb"))
+        est = F.aggregate(
+            F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        ) / F.lit(float(num_perms))
+        # cand (and the half-joined intermediate) are delta-bounded:
+        # broadcasting them keeps both signature lookups (pruned corpus
+        # scans) shuffle-free
+        half = sa.join(bcast(cand), "a")
+        edges = (
+            sb.join(bcast(half), "b")
+            .filter(est >= F.lit(threshold))
+            .select("a", "b")
+            .localCheckpoint(eager=True)  # delta-sized; reused 3× below
         )
-        # overlay rows carrying a TOUCHED label are exactly the touched
-        # components' current members: labels strictly decrease, so a
-        # stale label can never equal any component's live label (the
-        # doc that IS that label has itself been relabeled below it)
-        members = (
-            overlay.join(bcast(touched), "cluster_id", "left_semi")
-            .select("doc_id", "cluster_id")
-            .localCheckpoint(eager=True)
-        )
-        star = members.filter(F.col("doc_id") != F.col("cluster_id")).select(
-            F.col("doc_id").alias("a"), F.col("cluster_id").alias("b")
-        )
-        pairs = edges.unionByName(star)
-    else:
-        members = None
-        pairs = edges
 
-    from raft_spark.operators.solvers import connected_components_auto
+        if overlay is not None:
+            # components TOUCHED by a new edge: the current labels of the
+            # edges' old endpoints (new→old edges are the only way in —
+            # cand's _x side is always a new doc). Their members' star
+            # edges contract each touched component into its hub; untouched
+            # components never enter the solve and never get rewritten.
+            new_ids = incoming.select("doc_id")
+            ends = (
+                edges.select(F.col("a").alias("doc_id"))
+                .unionByName(edges.select(F.col("b").alias("doc_id")))
+                .distinct()
+                .join(new_ids, "doc_id", "left_anti")
+            )
+            # ends/touched are delta-bounded (edge endpoints / their
+            # labels); broadcasting them keeps the CORPUS-SCALE overlay
+            # store unshuffled through both membership probes — at 100 TB
+            # these two joins are the only corpus-sized inputs in the
+            # probe window
+            touched = (
+                overlay.join(bcast(ends), "doc_id", "left_semi")
+                .groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
+                .select("cluster_id").distinct()
+            )
+            # overlay rows carrying a TOUCHED label are exactly the touched
+            # components' current members: labels strictly decrease, so a
+            # stale label can never equal any component's live label (the
+            # doc that IS that label has itself been relabeled below it)
+            members = (
+                overlay.join(bcast(touched), "cluster_id", "left_semi")
+                .select("doc_id", "cluster_id")
+                .localCheckpoint(eager=True)
+            )
+            star = members.filter(F.col("doc_id") != F.col("cluster_id")).select(
+                F.col("doc_id").alias("a"), F.col("cluster_id").alias("b")
+            )
+            pairs = edges.unionByName(star)
+        else:
+            members = None
+            pairs = edges
 
-    labels = connected_components_auto(
-        pairs.select(F.col("a").alias("row"), F.col("b").alias("col"))
-    ).withColumnRenamed("node", "doc_id")
+        from raft_spark.operators.solvers import connected_components_auto
 
-    new_rows = (
-        incoming.select("doc_id")
-        .join(labels, "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("label"), F.col("doc_id")).alias("cluster_id"))
-    )
-    if members is not None:
-        relabeled = (
-            members.withColumnRenamed("cluster_id", "_old")
-            .join(labels, "doc_id")
-            .filter(F.col("label") != F.col("_old"))
-            .select("doc_id", F.col("label").alias("cluster_id"))
+        labels = connected_components_auto(
+            pairs.select(F.col("a").alias("row"), F.col("b").alias("col"))
+        ).withColumnRenamed("node", "doc_id")
+
+        new_rows = (
+            incoming.select("doc_id")
+            .join(labels, "doc_id", "left")
+            .select("doc_id", F.coalesce(F.col("label"), F.col("doc_id")).alias("cluster_id"))
         )
-        delta_overlay = new_rows.unionByName(relabeled)
-    else:
-        delta_overlay = new_rows
-    delta_overlay = delta_overlay.localCheckpoint(eager=True)
+        if members is not None:
+            relabeled = (
+                members.withColumnRenamed("cluster_id", "_old")
+                .join(labels, "doc_id")
+                .filter(F.col("label") != F.col("_old"))
+                .select("doc_id", F.col("label").alias("cluster_id"))
+            )
+            delta_overlay = new_rows.unionByName(relabeled)
+        else:
+            delta_overlay = new_rows
+        delta_overlay = delta_overlay.localCheckpoint(eager=True)
 
-    if not had_meta:
-        # meta BEFORE the appends (not between them): a crash here
-        # leaves a meta-only state ≡ bootstrap with the format pinned
-        _write_state_meta(spark, state_path, {
-            "num_perms": int(num_perms), "band_rows": int(band_rows),
-            "max_bucket_docs": int(max_bucket_docs),
-        })
-    # manifest commit: every append lands under _dv=<delivery id>;
-    # the id is published LAST, so a crash anywhere below leaves the
-    # delivery invisible and redelivery re-ingests it in full
-    dv = SS.new_delivery_id()
-    tag = F.lit(dv).alias("_dv")
-    sig_rows = incoming.withColumn("_pd", _doc_bucket(F.col("doc_id")))
-    # small deliveries land via append_store's driver-side Arrow path
-    # (the checkpointed delta is collected once and written file-per-
-    # bucket without Spark's ~1 s/write committer staging); large
-    # deliveries keep the distributed hash-spread write
-    SS.append_store(
-        (sig_rows if small_delta else sig_rows.repartition("_pd"))
-        .select(tag, "_pd", "doc_id", "sig"),
-        state_path + "/sigs", ("_dv", "_pd"), small=small_delta,
-    )
-    SS.append_store(
-        (nb if small_delta
-         else nb.repartition("_pb").sortWithinPartitions("band", "bsig"))
-        .select(tag, "_pb", "band", "bsig", "doc_id"),
-        state_path + "/bands", ("_dv", "_pb"), small=small_delta,
-        sort_by=("band", "bsig"),
-    )
-    occ_rows = nb_counts.select(tag, "_pb", "band", "bsig",
-                                F.col("_n_new").alias("n"))
-    SS.append_store(occ_rows, state_path + "/occ", ("_dv", "_pb"),
-                    small=small_delta)
-    # gate the driver-side/single-file append on the OVERLAY's own
-    # size, not the delta's (it also carries relabeled old rows; a
-    # small delta that relabels a huge component must not funnel the
-    # whole overlay through one task or the driver). Bootstrap
-    # deliveries have no relabeled rows — the overlay is exactly the
-    # delta — so the already-known n_delta stands in and the extra
-    # count job is skipped.
-    n_overlay = n_delta if members is None else delta_overlay.count()
-    SS.append_store(
-        delta_overlay.select(tag, "doc_id", "cluster_id"),
-        state_path + "/clusters", ("_dv",), small=n_overlay < 1_000_000,
-    )
+        if not had_meta:
+            # meta BEFORE the appends (not between them): a crash here
+            # leaves a meta-only state ≡ bootstrap with the format pinned
+            SS.write_meta(state_path, {k: int(v) for k, v in params.items()})
+        # manifest commit: every append lands under _dv=<delivery id>;
+        # the id is published LAST, so a crash anywhere below leaves the
+        # delivery invisible and redelivery re-ingests it in full
+        dv = SS.new_delivery_id()
+        tag = F.lit(dv).alias("_dv")
+        sig_rows = incoming.withColumn("_pd", _doc_bucket(F.col("doc_id")))
+        # small deliveries land via append_store's driver-side Arrow path
+        # (the checkpointed delta is collected once and written file-per-
+        # bucket without Spark's ~1 s/write committer staging); large
+        # deliveries keep the distributed hash-spread write
+        SS.append_store(
+            (sig_rows if small_delta else sig_rows.repartition("_pd"))
+            .select(tag, "_pd", "doc_id", "sig"),
+            state_path + "/sigs", ("_dv", "_pd"), small=small_delta,
+        )
+        SS.append_store(
+            (nb if small_delta
+             else nb.repartition("_pb").sortWithinPartitions("band", "bsig"))
+            .select(tag, "_pb", "band", "bsig", "doc_id"),
+            state_path + "/bands", ("_dv", "_pb"), small=small_delta,
+            sort_by=("band", "bsig"),
+        )
+        occ_rows = nb_counts.select(tag, "_pb", "band", "bsig",
+                                    F.col("_n_new").alias("n"))
+        SS.append_store(occ_rows, state_path + "/occ", ("_dv", "_pb"),
+                        small=small_delta)
+        # gate the driver-side/single-file append on the OVERLAY's own
+        # size, not the delta's (it also carries relabeled old rows; a
+        # small delta that relabels a huge component must not funnel the
+        # whole overlay through one task or the driver). Bootstrap
+        # deliveries have no relabeled rows — the overlay is exactly the
+        # delta — so the already-known n_delta stands in and the extra
+        # count job is skipped.
+        n_overlay = n_delta if members is None else delta_overlay.count()
+        SS.append_store(
+            delta_overlay.select(tag, "doc_id", "cluster_id"),
+            state_path + "/clusters", ("_dv",), small=n_overlay < 1_000_000,
+        )
     SS.publish_commit(spark, state_path, dv)  # THE commit point
-    if small_delta:
-        # corpus-scale resolve below — AQE back on
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     if not return_full:
         return delta_overlay
     # resolve from a FRESH post-append scan (a new file listing sees the
@@ -2211,7 +2111,9 @@ def _dedup_state_ingest_impl(
     # recorded constraints reference pruned attributes —
     # NoSuchElementException in UnionBase.rewriteConstraints — so the
     # scan stays.)
-    return _resolve_state_clusters(spark, state_path, (committed or []) + [dv])
+    return _resolve_state_clusters(
+        spark, state_path, (committed or []) + [dv]
+    ).localCheckpoint(eager=True)
 
 
 def _migrate_semantic_state(spark, state_path: str) -> None:
@@ -2284,6 +2186,18 @@ def _resolve_group_overlay(overlay: DataFrame) -> DataFrame:
     )
 
 
+def _resolve_state_groups(spark, state_path: str, ids) -> DataFrame:
+    """The :func:`_resolve_state_clusters` read-back for the semantic
+    state's groups overlay (callers checkpoint it)."""
+    return _resolve_group_overlay(
+        SS.visible(
+            spark.read.schema(_SEM_GROUPS_SCHEMA)
+            .parquet(state_path + "/groups"),
+            ids,
+        ).select("id", "cluster", "group")
+    )
+
+
 def semantic_state_ingest(
     new_df: DataFrame,
     assignments: DataFrame,
@@ -2295,25 +2209,13 @@ def semantic_state_ingest(
     return_full: bool = True,
 ) -> DataFrame:
     """Cross-snapshot incremental semantic dedup — full contract on
-    :func:`_semantic_state_ingest_impl` (shared ``__doc__``). This
-    wrapper only guarantees the session's AQE flag is restored even
-    when a delivery dies mid-ingest (the crash-injection contract
-    raises between store appends by design; the conf must not leak)."""
-    spark = new_df.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        out = _semantic_state_ingest_driver(
-            new_df, assignments, state_path, tau, id_col, vec_col, scale,
-            return_full,
-        )
-        if out is not None:
-            return out
-        return _semantic_state_ingest_impl(
-            new_df, assignments, state_path, tau, id_col, vec_col, scale,
-            return_full,
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    :func:`_semantic_state_ingest_impl`. A small delivery into a
+    driver-sized state takes :func:`_semantic_state_ingest_driver`; the
+    rest run the distributed impl."""
+    args = (new_df, assignments, state_path, tau, id_col, vec_col, scale,
+            return_full)
+    out = _semantic_state_ingest_driver(*args)
+    return out if out is not None else _semantic_state_ingest_impl(*args)
 
 
 def _sem_resolved_rows_table(pairs_iter):
@@ -2371,29 +2273,16 @@ def _semantic_state_ingest_driver(
     non-uniform dims, duplicate ids, or candidate explosion). Store
     parity driver-vs-distributed is pinned in
     tests/test_incremental_dedup.py."""
-    import warnings
-
     spark = new_df.sparkSession
     stores = ("index", "ids", "groups")
-    for s in stores:
-        if SS.store_row_count(state_path + "/" + s) >= SS.SMALL_STORE_ROWS:
-            return None
-    present = {s: os.path.isdir(state_path + "/" + s) for s in stores}
-    if len(set(present.values())) > 1:
-        return None  # mid-migration/legacy shape — distributed path
-    had_meta = _guard_state_meta(
-        spark, state_path, "semantic_state_ingest",
-        {"tau": float(tau), "scale": float(scale)},
+    present = SS.driver_state_gate(state_path, stores)
+    if present is None:
+        return None
+    params = {"tau": float(tau), "scale": float(scale)}
+    had_meta = _adopt_state_format(
+        spark, state_path, "semantic_state_ingest", params, "index",
+        _migrate_semantic_state, migrate_always=True,
     )
-    if not had_meta and present["index"]:
-        warnings.warn(
-            f"semantic_state_ingest: adopting this call's format "
-            f"parameters (tau={tau}, scale={scale}) for the legacy "
-            f"state at {state_path} — they become the state FORMAT and "
-            f"every later ingest must match",
-            stacklevel=3,
-        )
-    _migrate_semantic_state(spark, state_path)
     present = {s: os.path.isdir(state_path + "/" + s) for s in stores}
     committed = SS.adopt_commit_ledger(spark, state_path, stores)
 
@@ -2413,9 +2302,8 @@ def _semantic_state_ingest_driver(
         F.col("_q"), F.col("_n2"),
         _doc_bucket(F.col("id").cast("long")).alias("_pd"),
     )
-    with _no_aqe(spark, limit_rows=DRIVER_DELTA_DOCS):
-        t = probe_df.limit(DRIVER_DELTA_DOCS + 1).toArrow()
-    if t.num_rows > DRIVER_DELTA_DOCS:
+    t = SS.collect_capped(probe_df, DRIVER_DELTA_DOCS)
+    if t is None:
         return None
     qs = t.column("_q").to_pylist()
     if any(v is None or None in v for v in qs):
@@ -2442,7 +2330,6 @@ def _semantic_state_ingest_driver(
     # marker column makes the two cases separable, and the
     # assigned-but-null shape falls back to the distributed twin.
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     asg_l = t.column("_asg").to_pylist()
     if any(a is not None and c is None
@@ -2451,7 +2338,6 @@ def _semantic_state_ingest_driver(
     keep_idx = [i for i, a in enumerate(asg_l) if a is not None]
     if len(keep_idx) < t.num_rows:
         t = t.take(pa.array(keep_idx, pa.int64()))
-        qs = t.column("_q").to_pylist()
     cand_ids = t.column("cand_id").to_pylist()
     if any(i is None for i in cand_ids) \
             or len(set(cand_ids)) != len(cand_ids):
@@ -2459,49 +2345,29 @@ def _semantic_state_ingest_driver(
         # to the distributed path
 
     # replay anti-join against the ids registry, pruned to _pd buckets
-    if present["ids"]:
-        pds = sorted(set(t.column("_pd").to_pylist()))
-        old_reg = SS.read_store_arrow(
-            state_path + "/ids", committed, "_pd", pds, columns=["id"]
-        )
-        if old_reg is not None:
-            seen = set(old_reg.column("id").to_pylist())
-            if seen:
-                keep_idx = [i for i, x in enumerate(cand_ids)
-                            if x not in seen]
-                if len(keep_idx) < len(cand_ids):
-                    t = t.take(pa.array(keep_idx, pa.int64()))
-                    cand_ids = t.column("cand_id").to_pylist()
-                    qs = t.column("_q").to_pylist()
+    keep = SS.replay_keep(state_path + "/ids", committed, cand_ids, "id",
+                          "_pd", set(t.column("_pd").to_pylist()))
+    if keep is not None:
+        t = t.take(pa.array(keep, pa.int64()))
+        cand_ids = t.column("cand_id").to_pylist()
+    qs = t.column("_q").to_pylist()
     n_new = t.num_rows
+    group_cols = ["id", "cluster", "group"]
 
     if present["ids"] and n_new == 0:
         # pure replay (or an empty batch) — no state change
-        if return_full and present["groups"]:
-            g = SS.read_store_arrow(
-                state_path + "/groups", committed,
-                columns=["id", "cluster", "group"],
-            )
-            tbl = _sem_resolved_rows_table(
-                zip(g.column("id").to_pylist(),
-                    g.column("cluster").to_pylist(),
-                    g.column("group").to_pylist())
-                if g is not None else []
-            )
-            if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
-                return spark.createDataFrame(tbl)
-            return _resolve_group_overlay(
-                SS.visible(
-                    _try_parquet(spark, state_path + "/groups",
-                                 _SEM_GROUPS_SCHEMA),
-                    committed,
-                ).select("id", "cluster", "group")
-            ).localCheckpoint(eager=True)
-        if return_full:
+        if not return_full:
+            return spark.createDataFrame([], "id long, cluster long, group long")
+        if not present["groups"]:
             return spark.createDataFrame(
                 [], "id long, cluster long, group long, keep int"
             )
-        return spark.createDataFrame([], "id long, cluster long, group long")
+        return _resolved_frame(
+            spark,
+            _sem_resolved_rows_table(zip(*SS.read_store_columns(
+                state_path + "/groups", committed, group_cols))),
+            lambda: _resolve_state_groups(spark, state_path, committed),
+        )
 
     clusters_l = t.column("cluster").to_pylist()
     n2s = t.column("_n2").to_pylist()
@@ -2516,28 +2382,18 @@ def _semantic_state_ingest_driver(
     for i, c in enumerate(clusters_l):
         new_by_cluster[c].append(i)
     old_by_cluster: dict = {}
-    if present["index"]:
-        touched_clusters = sorted(new_by_cluster)
-        idx_t = SS.read_store_arrow(
-            state_path + "/index", committed, "cluster", touched_clusters,
-            columns=["cand_id", "_qc", "_nc"], attach_part=True,
-            attach_type=pa.int64(),
-        )
-        if idx_t is not None:
-            for cid, oq, on, c in zip(
-                idx_t.column("cand_id").to_pylist(),
-                idx_t.column("_qc").to_pylist(),
-                idx_t.column("_nc").to_pylist(),
-                idx_t.column("cluster").to_pylist(),
-            ):
-                if oq is not None and len(oq) != d:
-                    # persisted vectors of another dim (state built
-                    # under a different embedding model): the
-                    # distributed zip_with null-pads such pairs — keep
-                    # those semantics there instead of a ragged
-                    # np.array ValueError here
-                    return None
-                old_by_cluster.setdefault(c, []).append((cid, oq, on))
+    for cid, oq, on, c in zip(*SS.read_store_columns(
+            state_path + "/index", committed, ["cand_id", "_qc", "_nc",
+                                               "cluster"],
+            "cluster", sorted(new_by_cluster), attach_part=True,
+            attach_type=pa.int64())):
+        if oq is not None and len(oq) != d:
+            # persisted vectors of another dim (state built under a
+            # different embedding model): the distributed zip_with
+            # null-pads such pairs — keep those semantics there instead
+            # of a ragged np.array ValueError here
+            return None
+        old_by_cluster.setdefault(c, []).append((cid, oq, on))
     edges = []
     seen_pairs: set = set()
     for c, idxs in new_by_cluster.items():
@@ -2571,78 +2427,25 @@ def _semantic_state_ingest_driver(
         if len(seen_pairs) > _DRIVER_MAX_CAND:
             return None  # degenerate cluster profile — distributed path
 
-    # touched components: star-contract via the groups overlay
-    members = None
-    pairs = edges
-    g_id: list = []
-    g_cl: list = []
-    g_gr: list = []
-    if present["groups"]:
-        g = SS.read_store_arrow(
-            state_path + "/groups", committed,
-            columns=["id", "cluster", "group"],
-        )
-        if g is not None:
-            g_id = g.column("id").to_pylist()
-            g_cl = g.column("cluster").to_pylist()
-            g_gr = g.column("group").to_pylist()
-        new_idset = set(cand_ids)
-        ends = {i for e in edges for i in e} - new_idset
-        min_grp: dict = {}
-        for i, gr in zip(g_id, g_gr):
-            if i in ends and (i not in min_grp or gr < min_grp[i]):
-                min_grp[i] = gr
-        touched = set(min_grp.values())
-        members = [
-            (i, c, gr) for i, c, gr in zip(g_id, g_cl, g_gr)
-            if gr in touched
-        ]
-        star = [(i, gr) for i, _c, gr in members if i != gr]
-        pairs = edges + star
-
-    from raft_spark.operators.solvers import driver_union_find
-
-    labels = driver_union_find(pairs)
-    fresh = [
+    g_id, g_cl, g_gr = SS.read_store_columns(
+        state_path + "/groups", committed, group_cols)
+    labels, relabeled = _driver_relabel(edges, cand_ids, g_id, g_gr)
+    delta_overlay = [
         (i, c, labels.get(i, i)) for i, c in zip(cand_ids, clusters_l)
-    ]
-    if members is not None:
-        relabeled = [
-            (i, c, labels[i]) for i, c, old_g in members
-            if i in labels and labels[i] != old_g
-        ]
-        delta_overlay = fresh + relabeled
-    else:
-        delta_overlay = fresh
+    ] + [(g_id[k], g_cl[k], labels[g_id[k]]) for k in relabeled]
 
-    if not had_meta:
-        _write_state_meta(spark, state_path,
-                          {"tau": float(tau), "scale": float(scale)})
     # manifest commit: same append order/seam as the distributed path
     # (index, ids, groups; publish LAST)
-    dv = SS.new_delivery_id()
-    index_tbl = pa.table({
-        "_dv": pa.array([dv] * n_new, pa.int64()),
-        "cluster": t.column("cluster"), "cand_id": t.column("cand_id"),
-        "_qc": t.column("_q"), "_nc": t.column("_n2"),
-    })
-    SS.append_store(index_tbl, state_path + "/index", ("_dv", "cluster"),
-                    small=True)
-    ids_tbl = pa.table({
-        "_dv": pa.array([dv] * n_new, pa.int64()),
-        "_pd": t.column("_pd"), "id": t.column("cand_id"),
-    })
-    SS.append_store(ids_tbl, state_path + "/ids", ("_dv", "_pd"),
-                    small=True)
-    groups_tbl = pa.table({
-        "_dv": pa.array([dv] * len(delta_overlay), pa.int64()),
-        "id": pa.array([r[0] for r in delta_overlay], pa.int64()),
-        "cluster": pa.array([r[1] for r in delta_overlay], pa.int64()),
-        "group": pa.array([r[2] for r in delta_overlay], pa.int64()),
-    })
-    SS.append_store(groups_tbl, state_path + "/groups", ("_dv",),
-                    small=True)
-    SS.publish_commit(spark, state_path, dv)  # THE commit point
+    dv = SS.commit_delivery(spark, state_path, [
+        ("index", {"cluster": t.column("cluster"),
+                   "cand_id": t.column("cand_id"),
+                   "_qc": t.column("_q"), "_nc": t.column("_n2")},
+         ("cluster",), ()),
+        ("ids", {"_pd": t.column("_pd"), "id": t.column("cand_id")},
+         ("_pd",), ()),
+        ("groups", {c: pa.array([r[j] for r in delta_overlay], pa.int64())
+                    for j, c in enumerate(group_cols)}, (), ()),
+    ], meta=None if had_meta else params)
 
     if not return_full:
         return spark.createDataFrame(
@@ -2650,18 +2453,14 @@ def _semantic_state_ingest_driver(
         )
     import itertools
 
-    tbl = _sem_resolved_rows_table(
-        itertools.chain(zip(g_id, g_cl, g_gr), delta_overlay)
+    return _resolved_frame(
+        spark,
+        _sem_resolved_rows_table(
+            itertools.chain(zip(g_id, g_cl, g_gr), delta_overlay)
+        ),
+        lambda: _resolve_state_groups(
+            spark, state_path, (committed or []) + [dv]),
     )
-    if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
-        return spark.createDataFrame(tbl)
-    return _resolve_group_overlay(
-        SS.visible(
-            spark.read.schema(_SEM_GROUPS_SCHEMA)
-            .parquet(state_path + "/groups"),
-            (committed or []) + [dv],
-        ).select("id", "cluster", "group")
-    ).localCheckpoint(eager=True)
 
 
 def _semantic_state_ingest_impl(
@@ -2718,24 +2517,14 @@ def _semantic_state_ingest_impl(
     the ``commits`` ledger — same protocol and guarantees as
     :func:`dedup_state_ingest`.
     """
-    import warnings
-
     from raft_spark.operators.solvers import connected_components_auto
 
     spark = new_df.sparkSession
-    had_meta = _guard_state_meta(
-        spark, state_path, "semantic_state_ingest",
-        {"tau": float(tau), "scale": float(scale)},
+    params = {"tau": float(tau), "scale": float(scale)}
+    had_meta = _adopt_state_format(
+        spark, state_path, "semantic_state_ingest", params, "index",
+        _migrate_semantic_state, migrate_always=True,
     )
-    if not had_meta and _try_parquet(spark, state_path + "/index") is not None:
-        warnings.warn(
-            f"semantic_state_ingest: adopting this call's format "
-            f"parameters (tau={tau}, scale={scale}) for the legacy "
-            f"state at {state_path} — they become the state FORMAT and "
-            f"every later ingest must match",
-            stacklevel=2,
-        )
-    _migrate_semantic_state(spark, state_path)
     committed = SS.adopt_commit_ledger(
         spark, state_path, ("index", "ids", "groups")
     )
@@ -2810,169 +2599,161 @@ def _semantic_state_ingest_impl(
 
     small_delta = n_new < 1_000_000
     bcast = F.broadcast if small_delta else (lambda df_: df_)
-    if small_delta:
-        # AQE off for the delta-bounded probe section (through the
-        # appends; restored before the corpus-scale resolve, and by the
-        # public wrapper on any exit) — every AQE stage materialization
-        # is a scheduled job, and at this measured delivery size none of
-        # its services apply (the dedup_state_ingest discipline). Gated
-        # on delta size, not local mode.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # narrow the checkpointed delta for its many downstream scans
-        # (each later stage is trivial per row; with AQE off each would
-        # otherwise launch one task per inherited partition). coalesce
-        # after the checkpoint is a narrow view of the cached
-        # partitions — no extra job, no recompute.
-        new_rows = new_rows.coalesce(8)
-    tau_q = int(round(tau * 10_000))
-    a = new_rows.select(
-        "cluster", F.col("cand_id").alias("_a"),
-        F.col("_qc").alias("_qa"), F.col("_nc").alias("_na"),
-    )
-    if old_index is not None:
-        # probe pruned to the SURVIVING delta rows' clusters: the index
-        # is partitioned by cluster on disk, so the bounded IN-list is
-        # a PARTITION filter — IO tracks the batch's touched lists, not
-        # the index size (the sparse_lookup shard discipline). The
-        # cluster count is the caller's quantizer size (bounded).
-        with _no_aqe(spark, enabled=not small_delta):
-            touched_clusters = sorted(
-                r["cluster"]
-                for r in new_rows.select("cluster").distinct().collect()
+    # AQE off for the delta-bounded probe section (through the appends;
+    # the scope restores it for the corpus-scale resolve below, and on
+    # any exit) — every AQE stage materialization is a scheduled job,
+    # and at this measured delivery size none of its services apply (the
+    # dedup_state_ingest discipline). Gated on delta size, not local
+    # mode.
+    with _no_aqe(spark, enabled=small_delta):
+        if small_delta:
+            # narrow the checkpointed delta for its many downstream scans
+            # (each later stage is trivial per row; with AQE off each would
+            # otherwise launch one task per inherited partition). coalesce
+            # after the checkpoint is a narrow view of the cached
+            # partitions — no extra job, no recompute.
+            new_rows = new_rows.coalesce(8)
+        tau_q = int(round(tau * 10_000))
+        a = new_rows.select(
+            "cluster", F.col("cand_id").alias("_a"),
+            F.col("_qc").alias("_qa"), F.col("_nc").alias("_na"),
+        )
+        if old_index is not None:
+            # probe pruned to the SURVIVING delta rows' clusters: the index
+            # is partitioned by cluster on disk, so the bounded IN-list is
+            # a PARTITION filter — IO tracks the batch's touched lists, not
+            # the index size (the sparse_lookup shard discipline). The
+            # cluster count is the caller's quantizer size (bounded).
+            with _no_aqe(spark, enabled=not small_delta):
+                touched_clusters = sorted(
+                    r["cluster"]
+                    for r in new_rows.select("cluster").distinct().collect()
+                )
+            corpus = old_index.where(
+                F.col("cluster").isin(touched_clusters)
+            ).unionByName(new_rows)
+        else:
+            corpus = new_rows
+        b = corpus.select(
+            "cluster", F.col("cand_id").alias("_b"),
+            F.col("_qc").alias("_qb"), F.col("_nc").alias("_nb"),
+        )
+        s_expr = F.aggregate(
+            F.zip_with("_qa", "_qb", lambda x, y: x * y),
+            F.lit(0).cast("long"), lambda acc, v: acc + v,
+        )
+        dec = "decimal(38,0)"
+        sd = F.col("_s").cast(dec)
+        pred = (F.col("_s") > 0) & (
+            sd * sd * F.lit(100_000_000).cast(dec)
+            >= F.lit(tau_q * tau_q).cast(dec)
+            * F.col("_na").cast(dec) * F.col("_nb").cast(dec)
+        )
+        edges = (
+            a.join(b, "cluster")
+            .filter(F.col("_a") != F.col("_b"))
+            .withColumn("_s", s_expr)
+            .filter(pred)
+            .select(
+                F.least("_a", "_b").alias("row"), F.greatest("_a", "_b").alias("col")
             )
-        corpus = old_index.where(
-            F.col("cluster").isin(touched_clusters)
-        ).unionByName(new_rows)
-    else:
-        corpus = new_rows
-    b = corpus.select(
-        "cluster", F.col("cand_id").alias("_b"),
-        F.col("_qc").alias("_qb"), F.col("_nc").alias("_nb"),
-    )
-    s_expr = F.aggregate(
-        F.zip_with("_qa", "_qb", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, v: acc + v,
-    )
-    dec = "decimal(38,0)"
-    sd = F.col("_s").cast(dec)
-    pred = (F.col("_s") > 0) & (
-        sd * sd * F.lit(100_000_000).cast(dec)
-        >= F.lit(tau_q * tau_q).cast(dec)
-        * F.col("_na").cast(dec) * F.col("_nb").cast(dec)
-    )
-    edges = (
-        a.join(b, "cluster")
-        .filter(F.col("_a") != F.col("_b"))
-        .withColumn("_s", s_expr)
-        .filter(pred)
-        .select(
-            F.least("_a", "_b").alias("row"), F.greatest("_a", "_b").alias("col")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # delta-sized; reused 3× below
-    )
-
-    if overlay is not None:
-        new_ids = new_rows.select(F.col("cand_id").alias("id"))
-        ends = (
-            edges.select(F.col("row").alias("id"))
-            .unionByName(edges.select(F.col("col").alias("id")))
             .distinct()
-            .join(new_ids, "id", "left_anti")
+            .localCheckpoint(eager=True)  # delta-sized; reused 3× below
         )
-        # ends/touched are delta-bounded (edge endpoints / their
-        # labels); broadcasting them keeps the CORPUS-SCALE overlay
-        # store unshuffled through both membership probes — at 100 TB
-        # these two joins are the only corpus-sized inputs in the
-        # probe window
-        touched = (
-            overlay.join(bcast(ends), "id", "left_semi")
-            .groupBy("id").agg(F.min("group").alias("group"))
-            .select("group").distinct()
-        )
-        members = (
-            overlay.join(bcast(touched), "group", "left_semi")
-            .select("id", "cluster", "group")
-            .localCheckpoint(eager=True)
-        )
-        star = members.filter(F.col("id") != F.col("group")).select(
-            F.col("id").alias("row"), F.col("group").alias("col")
-        )
-        coo = edges.unionByName(star)
-    else:
-        members = None
-        coo = edges
-    labels = connected_components_auto(coo).withColumnRenamed("node", "id")
 
-    fresh = (
-        new_rows.select(F.col("cand_id").alias("id"), "cluster")
-        .join(labels, "id", "left")
-        .select(
-            "id", "cluster",
-            F.coalesce(F.col("label"), F.col("id")).alias("group"),
-        )
-    )
-    if members is not None:
-        relabeled = (
-            members.withColumnRenamed("group", "_old")
-            .join(labels, "id")
-            .filter(F.col("label") != F.col("_old"))
-            .select("id", "cluster", F.col("label").alias("group"))
-        )
-        delta_overlay = fresh.unionByName(relabeled)
-    else:
-        delta_overlay = fresh
-    delta_overlay = delta_overlay.localCheckpoint(eager=True)
+        if overlay is not None:
+            new_ids = new_rows.select(F.col("cand_id").alias("id"))
+            ends = (
+                edges.select(F.col("row").alias("id"))
+                .unionByName(edges.select(F.col("col").alias("id")))
+                .distinct()
+                .join(new_ids, "id", "left_anti")
+            )
+            # ends/touched are delta-bounded (edge endpoints / their
+            # labels); broadcasting them keeps the CORPUS-SCALE overlay
+            # store unshuffled through both membership probes — at 100 TB
+            # these two joins are the only corpus-sized inputs in the
+            # probe window
+            touched = (
+                overlay.join(bcast(ends), "id", "left_semi")
+                .groupBy("id").agg(F.min("group").alias("group"))
+                .select("group").distinct()
+            )
+            members = (
+                overlay.join(bcast(touched), "group", "left_semi")
+                .select("id", "cluster", "group")
+                .localCheckpoint(eager=True)
+            )
+            star = members.filter(F.col("id") != F.col("group")).select(
+                F.col("id").alias("row"), F.col("group").alias("col")
+            )
+            coo = edges.unionByName(star)
+        else:
+            members = None
+            coo = edges
+        labels = connected_components_auto(coo).withColumnRenamed("node", "id")
 
-    # all three stores are APPEND-ONLY (one new file set per delivery,
-    # list directories intact); manifest commit: appends tagged
-    # _dv=<delivery id>, published LAST
-    if not had_meta:
-        _write_state_meta(spark, state_path,
-                          {"tau": float(tau), "scale": float(scale)})
-    dv = SS.new_delivery_id()
-    tag = F.lit(dv).alias("_dv")
-    # small deliveries land via append_store's driver-side Arrow path
-    # (the checkpointed delta is collected once and written file-per-
-    # partition-dir without Spark's ~1 s/write committer staging);
-    # large deliveries keep the distributed write
-    SS.append_store(
-        new_rows.select(tag, "cluster", "cand_id", "_qc", "_nc"),
-        state_path + "/index", ("_dv", "cluster"), small=small_delta,
-    )
-    id_rows = new_rows.select(
-        tag, _doc_bucket(F.col("cand_id")).alias("_pd"),
-        F.col("cand_id").alias("id"),
-    )
-    SS.append_store(
-        id_rows if small_delta else id_rows.repartition("_pd"),
-        state_path + "/ids", ("_dv", "_pd"), small=small_delta,
-    )
-    # gate the driver-side/single-file append on the OVERLAY's size, not
-    # the delta's (delta_overlay also carries relabeled old rows: a
-    # small delta that relabels a huge existing component must not
-    # funnel a multi-million row append through one task or the
-    # driver). Bootstrap deliveries have no relabeled rows — the
-    # overlay IS the delta — so the known n_new stands in and the count
-    # job is skipped; otherwise the count is cheap (the overlay is
-    # localCheckpoint'ed above).
-    n_overlay = n_new if members is None else delta_overlay.count()
-    SS.append_store(
-        delta_overlay.select(tag, "id", "cluster", "group"),
-        state_path + "/groups", ("_dv",), small=n_overlay < 1_000_000,
-    )
+        fresh = (
+            new_rows.select(F.col("cand_id").alias("id"), "cluster")
+            .join(labels, "id", "left")
+            .select(
+                "id", "cluster",
+                F.coalesce(F.col("label"), F.col("id")).alias("group"),
+            )
+        )
+        if members is not None:
+            relabeled = (
+                members.withColumnRenamed("group", "_old")
+                .join(labels, "id")
+                .filter(F.col("label") != F.col("_old"))
+                .select("id", "cluster", F.col("label").alias("group"))
+            )
+            delta_overlay = fresh.unionByName(relabeled)
+        else:
+            delta_overlay = fresh
+        delta_overlay = delta_overlay.localCheckpoint(eager=True)
+
+        # all three stores are APPEND-ONLY (one new file set per delivery,
+        # list directories intact); manifest commit: appends tagged
+        # _dv=<delivery id>, published LAST
+        if not had_meta:
+            SS.write_meta(state_path, params)
+        dv = SS.new_delivery_id()
+        tag = F.lit(dv).alias("_dv")
+        # small deliveries land via append_store's driver-side Arrow path
+        # (the checkpointed delta is collected once and written file-per-
+        # partition-dir without Spark's ~1 s/write committer staging);
+        # large deliveries keep the distributed write
+        SS.append_store(
+            new_rows.select(tag, "cluster", "cand_id", "_qc", "_nc"),
+            state_path + "/index", ("_dv", "cluster"), small=small_delta,
+        )
+        id_rows = new_rows.select(
+            tag, _doc_bucket(F.col("cand_id")).alias("_pd"),
+            F.col("cand_id").alias("id"),
+        )
+        SS.append_store(
+            id_rows if small_delta else id_rows.repartition("_pd"),
+            state_path + "/ids", ("_dv", "_pd"), small=small_delta,
+        )
+        # gate the driver-side/single-file append on the OVERLAY's size, not
+        # the delta's (delta_overlay also carries relabeled old rows: a
+        # small delta that relabels a huge existing component must not
+        # funnel a multi-million row append through one task or the
+        # driver). Bootstrap deliveries have no relabeled rows — the
+        # overlay IS the delta — so the known n_new stands in and the count
+        # job is skipped; otherwise the count is cheap (the overlay is
+        # localCheckpoint'ed above).
+        n_overlay = n_new if members is None else delta_overlay.count()
+        SS.append_store(
+            delta_overlay.select(tag, "id", "cluster", "group"),
+            state_path + "/groups", ("_dv",), small=n_overlay < 1_000_000,
+        )
     SS.publish_commit(spark, state_path, dv)  # THE commit point
-    if small_delta:
-        # corpus-scale resolve below — AQE back on
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     if not return_full:
         return delta_overlay
-    return _resolve_group_overlay(
-        SS.visible(
-            spark.read.schema(_SEM_GROUPS_SCHEMA)
-            .parquet(state_path + "/groups"),
-            (committed or []) + [dv],
-        ).select("id", "cluster", "group")
+    return _resolve_state_groups(
+        spark, state_path, (committed or []) + [dv]
     ).localCheckpoint(eager=True)
 
 
@@ -3075,24 +2856,10 @@ def compact_dedup_state(spark, state_path: str, partitions: int | None = None) -
         )
         if not has_pd:  # pre-r11: bucket while compacting
             sigs = sigs.withColumn("_pd", _doc_bucket(F.col("doc_id")))
-        out = sigs.select(zero, "_pd", "doc_id", "sig")
-        # small stores (footer-walk row count — an upper bound on the
-        # visible rows) rewrite via one Arrow collect + driver-side file
-        # writes: a distributed partitionBy write pays ~1-3 s of
-        # committer staging to land a few MB (the append_store small=
-        # discipline, applied to the maintenance rewrite)
-        if SS.store_row_count(store) < SS.SMALL_STORE_ROWS:
-            n = SS.compact_store_driver(
-                out, store + ".__new", ("_dv", "_pd"))
-            SS.swap_in(store + ".__new", store)
-            return n
-        out.repartition("_pd") \
-            .write.partitionBy("_dv", "_pd").mode("overwrite") \
-            .parquet(store + ".__new")
-        SS.swap_in(store + ".__new", store)
-        # row count from the rewritten files' parquet footers — a
-        # driver-side metadata walk, not another scheduled scan
-        return SS.store_row_count(store)
+        return SS.compact_leg(
+            store, sigs.select(zero, "_pd", "doc_id", "sig"), ("_dv", "_pd"),
+            shape=lambda o: o.repartition("_pd"),
+        )
 
     def _bands_leg() -> None:
         store = state_path + "/bands"
@@ -3117,18 +2884,13 @@ def compact_dedup_state(spark, state_path: str, partitions: int | None = None) -
         bands = SS.visible(
             _try_parquet(spark, store, _BANDS_SCHEMA), committed
         )
-        if bands is None:
-            return
-        out = bands.select(zero, "_pb", "band", "bsig", "doc_id")
-        if SS.store_row_count(store) < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, store + ".__new", ("_dv", "_pb"),
-                sort_by=("band", "bsig"))
-        else:
-            out.repartition("_pb").sortWithinPartitions("band", "bsig") \
-                .write.partitionBy("_dv", "_pb").mode("overwrite") \
-                .parquet(store + ".__new")
-        SS.swap_in(store + ".__new", store)
+        if bands is not None:
+            SS.compact_leg(
+                store, bands.select(zero, "_pb", "band", "bsig", "doc_id"),
+                ("_dv", "_pb"), sort_by=("band", "bsig"),
+                shape=lambda o: o.repartition("_pb")
+                .sortWithinPartitions("band", "bsig"),
+            )
 
     def _occ_leg() -> None:
         store = state_path + "/occ"
@@ -3165,17 +2927,13 @@ def compact_dedup_state(spark, state_path: str, partitions: int | None = None) -
         occ = SS.visible(
             _try_parquet(spark, store, _OCC_SCHEMA), committed
         )
-        if occ is None:
-            return
-        out = occ.groupBy("_pb", "band", "bsig").agg(F.sum("n").alias("n")) \
-            .select(zero, "_pb", "band", "bsig", "n")
-        if SS.store_row_count(store) < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, store + ".__new", ("_dv", "_pb"))
-        else:
-            out.write.partitionBy("_dv", "_pb").mode("overwrite") \
-                .parquet(store + ".__new")
-        SS.swap_in(store + ".__new", store)
+        if occ is not None:
+            SS.compact_leg(
+                store,
+                occ.groupBy("_pb", "band", "bsig").agg(F.sum("n").alias("n"))
+                .select(zero, "_pb", "band", "bsig", "n"),
+                ("_dv", "_pb"),
+            )
 
     def _clusters_leg() -> None:
         store = state_path + "/clusters"
@@ -3206,19 +2964,14 @@ def compact_dedup_state(spark, state_path: str, partitions: int | None = None) -
         overlay = SS.visible(
             _try_parquet(spark, store, _CLUSTERS_SCHEMA), committed
         )
-        if overlay is None:
-            return
-        out = overlay.groupBy("doc_id") \
-            .agg(F.min("cluster_id").alias("cluster_id")) \
-            .select(zero, "doc_id", "cluster_id")
-        if SS.store_row_count(store) < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, store + ".__new", ("_dv",))
-        else:
-            out.repartition(n_parts) \
-                .write.partitionBy("_dv").mode("overwrite") \
-                .parquet(store + ".__new")
-        SS.swap_in(store + ".__new", store)
+        if overlay is not None:
+            SS.compact_leg(
+                store,
+                overlay.groupBy("doc_id")
+                .agg(F.min("cluster_id").alias("cluster_id"))
+                .select(zero, "doc_id", "cluster_id"),
+                ("_dv",), shape=lambda o: o.repartition(n_parts),
+            )
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_sigs = pool.submit(_sigs_leg)
@@ -3257,56 +3010,37 @@ def compact_semantic_state(spark, state_path: str,
             .parquet(state_path + "/index"),
             committed,
         )
-        out = idx.select(zero, "cluster", "cand_id", "_qc", "_nc")
-        # small stores (footer-walk upper bound on the visible rows)
-        # rewrite via one Arrow collect + driver-side file writes — the
-        # compact_dedup_state discipline
-        if SS.store_row_count(state_path + "/index") < SS.SMALL_STORE_ROWS:
-            n = SS.compact_store_driver(
-                out, state_path + "/index.__new", ("_dv", "cluster"))
-            SS.swap_in(state_path + "/index.__new", state_path + "/index")
-            return n
-        out.repartition("cluster") \
-            .write.partitionBy("_dv", "cluster").mode("overwrite") \
-            .parquet(state_path + "/index.__new")
-        SS.swap_in(state_path + "/index.__new", state_path + "/index")
-        return SS.store_row_count(state_path + "/index")  # footer walk
+        return SS.compact_leg(
+            state_path + "/index",
+            idx.select(zero, "cluster", "cand_id", "_qc", "_nc"),
+            ("_dv", "cluster"), shape=lambda o: o.repartition("cluster"),
+        )
 
     def _ids_leg() -> None:
         ids = SS.visible(
             _try_parquet(spark, state_path + "/ids", _SEM_IDS_SCHEMA),
             committed,
         )
-        if ids is None:
-            return
-        out = ids.select(zero, "_pd", "id")
-        if SS.store_row_count(state_path + "/ids") < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, state_path + "/ids.__new", ("_dv", "_pd"))
-        else:
-            out.repartition("_pd") \
-                .write.partitionBy("_dv", "_pd").mode("overwrite") \
-                .parquet(state_path + "/ids.__new")
-        SS.swap_in(state_path + "/ids.__new", state_path + "/ids")
+        if ids is not None:
+            SS.compact_leg(
+                state_path + "/ids", ids.select(zero, "_pd", "id"),
+                ("_dv", "_pd"), shape=lambda o: o.repartition("_pd"),
+            )
 
     def _groups_leg() -> None:
         overlay = SS.visible(
             _try_parquet(spark, state_path + "/groups", _SEM_GROUPS_SCHEMA),
             committed,
         )
-        if overlay is None:
-            return
-        out = overlay.groupBy("id").agg(
-            F.min("cluster").alias("cluster"), F.min("group").alias("group")
-        ).select(zero, "id", "cluster", "group")
-        if SS.store_row_count(state_path + "/groups") < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, state_path + "/groups.__new", ("_dv",))
-        else:
-            out.repartition(n_parts) \
-                .write.partitionBy("_dv").mode("overwrite") \
-                .parquet(state_path + "/groups.__new")
-        SS.swap_in(state_path + "/groups.__new", state_path + "/groups")
+        if overlay is not None:
+            SS.compact_leg(
+                state_path + "/groups",
+                overlay.groupBy("id").agg(
+                    F.min("cluster").alias("cluster"),
+                    F.min("group").alias("group"),
+                ).select(zero, "id", "cluster", "group"),
+                ("_dv",), shape=lambda o: o.repartition(n_parts),
+            )
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_idx = pool.submit(_index_leg)
@@ -3345,38 +3079,23 @@ def compact_span_state(spark, state_path: str,
             .parquet(state_path + "/tokens"),
             committed,
         )
-        out = tk.select(zero, "doc_id", "n_tokens")
-        # small stores (footer-walk upper bound on the visible rows)
-        # rewrite via one Arrow collect + driver-side file writes — the
-        # compact_dedup_state discipline
-        if SS.store_row_count(state_path + "/tokens") < SS.SMALL_STORE_ROWS:
-            n = SS.compact_store_driver(
-                out, state_path + "/tokens.__new", ("_dv",))
-            SS.swap_in(state_path + "/tokens.__new", state_path + "/tokens")
-            return n
-        out.repartition(max(1, n_parts // 8)) \
-            .write.partitionBy("_dv").mode("overwrite") \
-            .parquet(state_path + "/tokens.__new")
-        SS.swap_in(state_path + "/tokens.__new", state_path + "/tokens")
-        return SS.store_row_count(state_path + "/tokens")  # footer walk
+        return SS.compact_leg(
+            state_path + "/tokens", tk.select(zero, "doc_id", "n_tokens"),
+            ("_dv",), shape=lambda o: o.repartition(max(1, n_parts // 8)),
+        )
 
     def _spans_leg() -> None:
         sp = SS.visible(
             _try_parquet(spark, state_path + "/spans", _SPAN_SPANS_SCHEMA),
             committed,
         )
-        if sp is None:
-            return
-        out = sp.select(zero, "_ph", "h", "doc_id", "start")
-        if SS.store_row_count(state_path + "/spans") < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, state_path + "/spans.__new", ("_dv", "_ph"),
-                sort_by=("h",))
-        else:
-            out.repartition("_ph").sortWithinPartitions("h") \
-                .write.partitionBy("_dv", "_ph").mode("overwrite") \
-                .parquet(state_path + "/spans.__new")
-        SS.swap_in(state_path + "/spans.__new", state_path + "/spans")
+        if sp is not None:
+            SS.compact_leg(
+                state_path + "/spans",
+                sp.select(zero, "_ph", "h", "doc_id", "start"),
+                ("_dv", "_ph"), sort_by=("h",),
+                shape=lambda o: o.repartition("_ph").sortWithinPartitions("h"),
+            )
 
     def _hcounts_leg() -> None:
         # legacy detection driver-side (directory probe) so the read can
@@ -3397,34 +3116,25 @@ def compact_span_state(spark, state_path: str,
                 F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS)).cast("int")
                 .alias("_ph"), "h", "c",
             )
-        out = hc.groupBy("_ph", "h").agg(F.sum("c").alias("c")) \
-            .select(zero, "_ph", "h", "c")
-        if SS.store_row_count(state_path + "/hcounts") < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, state_path + "/hcounts.__new", ("_dv", "_ph"),
-                sort_by=("h",))
-        else:
-            out.write.partitionBy("_dv", "_ph").mode("overwrite") \
-                .parquet(state_path + "/hcounts.__new")
-        SS.swap_in(state_path + "/hcounts.__new", state_path + "/hcounts")
+        SS.compact_leg(
+            state_path + "/hcounts",
+            hc.groupBy("_ph", "h").agg(F.sum("c").alias("c"))
+            .select(zero, "_ph", "h", "c"),
+            ("_dv", "_ph"), sort_by=("h",),
+        )
 
     def _flags_leg() -> None:
         fl = SS.visible(
             _try_parquet(spark, state_path + "/flags", _SPAN_FLAGS_SCHEMA),
             committed,
         )
-        if fl is None:
-            return
-        out = fl.select("doc_id", "start").distinct() \
-            .select(zero, "doc_id", "start")
-        if SS.store_row_count(state_path + "/flags") < SS.SMALL_STORE_ROWS:
-            SS.compact_store_driver(
-                out, state_path + "/flags.__new", ("_dv",))
-        else:
-            out.repartition(max(1, n_parts // 8)) \
-                .write.partitionBy("_dv").mode("overwrite") \
-                .parquet(state_path + "/flags.__new")
-        SS.swap_in(state_path + "/flags.__new", state_path + "/flags")
+        if fl is not None:
+            SS.compact_leg(
+                state_path + "/flags",
+                fl.select("doc_id", "start").distinct()
+                .select(zero, "doc_id", "start"),
+                ("_dv",), shape=lambda o: o.repartition(max(1, n_parts // 8)),
+            )
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_tok = pool.submit(_tokens_leg)
@@ -3533,25 +3243,13 @@ def span_state_ingest(
     return_full: bool = True,
 ) -> DataFrame:
     """Cross-snapshot incremental span dedup — full contract on
-    :func:`_span_state_ingest_impl` (shared ``__doc__``). This wrapper
-    only guarantees the session's AQE flag is restored even when a
-    delivery dies mid-ingest (the crash-injection contract raises
-    between store appends by design; the conf must not leak)."""
-    spark = new_docs.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        out = _span_state_ingest_driver(
-            new_docs, state_path, n, min_count, text_col, id_col,
-            return_full,
-        )
-        if out is not None:
-            return out
-        return _span_state_ingest_impl(
-            new_docs, state_path, n, min_count, text_col, id_col,
-            return_full,
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    :func:`_span_state_ingest_impl`. A small delivery into a
+    driver-sized state takes :func:`_span_state_ingest_driver`; the
+    rest run the distributed impl."""
+    args = (new_docs, state_path, n, min_count, text_col, id_col,
+            return_full)
+    out = _span_state_ingest_driver(*args)
+    return out if out is not None else _span_state_ingest_impl(*args)
 
 
 # driver-path cap on the delta's total window rows (each is ~60 bytes
@@ -3634,66 +3332,52 @@ def _span_state_ingest_driver(
     pruned pyarrow store reads; appends ride the same append_store
     seam in the same order. Returns None to fall back to the
     distributed path. Parity pinned in tests/test_incremental_dedup.py."""
-    import warnings
+    import itertools
 
     spark = new_docs.sparkSession
     stores = ("tokens", "spans", "hcounts", "flags")
-    for s in stores:
-        if SS.store_row_count(state_path + "/" + s) >= SS.SMALL_STORE_ROWS:
-            return None
-    present = {s: os.path.isdir(state_path + "/" + s) for s in stores}
-    if len(set(present.values())) > 1:
-        return None  # mid-migration/legacy shape — distributed path
-    had_meta = _guard_state_meta(
-        spark, state_path, "span_state_ingest",
-        {"n": int(n), "min_count": int(min_count)},
+    present = SS.driver_state_gate(state_path, stores)
+    if present is None:
+        return None
+    params = {"n": int(n), "min_count": int(min_count)}
+    # migration NOT gated on had_meta: r10 span states have meta but
+    # flat hcounts
+    had_meta = _adopt_state_format(
+        spark, state_path, "span_state_ingest", params, "tokens",
+        _migrate_span_state, migrate_always=True,
     )
-    # NOT gated on had_meta: r10 span states have meta but flat hcounts
-    _migrate_span_state(spark, state_path)
-    if not had_meta and present["tokens"]:
-        warnings.warn(
-            f"span_state_ingest: adopting this call's format parameters "
-            f"(n={n}, min_count={min_count}) for the legacy state at "
-            f"{state_path} — they become the state FORMAT and every "
-            f"later ingest must match",
-            stacklevel=3,
-        )
     committed = SS.adopt_commit_ledger(spark, state_path, stores)
 
     # THE one Spark job: per-doc token counts + nested window structs
     # (start, h, _ph), all derived by the span_hash_table expressions
-    def _build_probe():
-        toks = F.filter(
-            F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")
-        )
-        spans = F.when(
-            F.col("_ntok") >= F.lit(n),
+    toks = F.filter(
+        F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")
+    )
+    spans = F.when(
+        F.col("_ntok") >= F.lit(n),
+        F.transform(
             F.transform(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("_ntok") - n),
-                    lambda i: F.md5(
-                        F.concat_ws(" ", F.slice("_t", i + F.lit(1), n))
-                    ),
-                ),
-                lambda h, i: F.struct(
-                    i.alias("start"), h.alias("h"),
-                    F.pmod(F.xxhash64(h), F.lit(N_BAND_BUCKETS))
-                    .cast("int").alias("_ph"),
+                F.sequence(F.lit(0), F.col("_ntok") - n),
+                lambda i: F.md5(
+                    F.concat_ws(" ", F.slice("_t", i + F.lit(1), n))
                 ),
             ),
-        ).alias("_spans")
-        return (
-            new_docs.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                toks.alias("_t"),
-            )
-            .withColumn("_ntok", F.size("_t"))
-            .select("doc_id", F.col("_ntok").alias("n_tokens"), spans)
+            lambda h, i: F.struct(
+                i.alias("start"), h.alias("h"),
+                F.pmod(F.xxhash64(h), F.lit(N_BAND_BUCKETS))
+                .cast("int").alias("_ph"),
+            ),
+        ),
+    ).alias("_spans")
+    t = SS.collect_capped(
+        new_docs.select(
+            F.col(id_col).cast("long").alias("doc_id"), toks.alias("_t"),
         )
-
-    with _no_aqe(spark, limit_rows=DRIVER_DELTA_DOCS):
-        t = _build_probe().limit(DRIVER_DELTA_DOCS + 1).toArrow()
-    if t.num_rows > DRIVER_DELTA_DOCS:
+        .withColumn("_ntok", F.size("_t"))
+        .select("doc_id", F.col("_ntok").alias("n_tokens"), spans),
+        DRIVER_DELTA_DOCS,
+    )
+    if t is None:
         return None
     doc_ids = t.column("doc_id").to_pylist()
     if any(d is None for d in doc_ids) or len(set(doc_ids)) != len(doc_ids):
@@ -3702,45 +3386,34 @@ def _span_state_ingest_driver(
     spans_nested = t.column("_spans").to_pylist()
 
     # replay anti-join against the tokens registry
-    if present["tokens"]:
-        reg = SS.read_store_arrow(state_path + "/tokens", committed,
-                                  columns=["doc_id"])
-        seen = set(reg.column("doc_id").to_pylist()) if reg is not None \
-            else set()
-        if seen:
-            kept = [i for i, d in enumerate(doc_ids) if d not in seen]
-            if len(kept) < len(doc_ids):
-                doc_ids = [doc_ids[i] for i in kept]
-                ntoks = [ntoks[i] for i in kept]
-                spans_nested = [spans_nested[i] for i in kept]
+    keep = SS.replay_keep(state_path + "/tokens", committed, doc_ids,
+                          "doc_id")
+    if keep is not None:
+        doc_ids = [doc_ids[i] for i in keep]
+        ntoks = [ntoks[i] for i in keep]
+        spans_nested = [spans_nested[i] for i in keep]
     n_delta = len(doc_ids)
 
-    meta_n = int(n)
+    def _resolve(tok_pairs=(), flag_pairs=()):
+        # committed tokens/flags + this delivery's rows
+        return _resolved_frame(
+            spark,
+            _span_resolved_table(
+                itertools.chain(zip(*SS.read_store_columns(
+                    state_path + "/tokens", committed,
+                    ["doc_id", "n_tokens"])), tok_pairs),
+                itertools.chain(zip(*SS.read_store_columns(
+                    state_path + "/flags", committed,
+                    ["doc_id", "start"])), flag_pairs),
+                int(n),
+            ),
+            lambda: read_span_state(spark, state_path),
+        )
+
     if present["tokens"] and n_delta == 0:  # pure replay
         if return_full:
-            tok_t = SS.read_store_arrow(
-                state_path + "/tokens", committed,
-                columns=["doc_id", "n_tokens"],
-            )
-            fl_t = SS.read_store_arrow(
-                state_path + "/flags", committed,
-                columns=["doc_id", "start"],
-            )
-            tbl = _span_resolved_table(
-                zip(tok_t.column("doc_id").to_pylist(),
-                    tok_t.column("n_tokens").to_pylist())
-                if tok_t is not None else [],
-                zip(fl_t.column("doc_id").to_pylist(),
-                    fl_t.column("start").to_pylist())
-                if fl_t is not None else [],
-                meta_n,
-            )
-            if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
-                return spark.createDataFrame(tbl)
-            return read_span_state(spark, state_path).localCheckpoint(
-                eager=True
-            )
-        return spark.createDataFrame([], "doc_id long, start long")
+            return _resolve()
+        return spark.createDataFrame([], "doc_id long, start int")
 
     # explode the nested structs driver-side
     span_doc: list = []
@@ -3766,16 +3439,10 @@ def _span_state_ingest_driver(
     h_ph = dict(zip(span_h, span_ph))
     phs = sorted(set(span_ph))
     old_co: Counter = Counter()
-    if present["hcounts"]:
-        hc = SS.read_store_arrow(
-            state_path + "/hcounts", committed, "_ph", phs,
-            columns=["h", "c"],
-        )
-        if hc is not None:
-            for h, c in zip(hc.column("h").to_pylist(),
-                            hc.column("c").to_pylist()):
-                if h in delta_counts:
-                    old_co[h] += c
+    for h, c in zip(*SS.read_store_columns(
+            state_path + "/hcounts", committed, ["h", "c"], "_ph", phs)):
+        if h in delta_counts:
+            old_co[h] += c
     dup_h = {
         h: old_co.get(h, 0)
         for h, cd in delta_counts.items()
@@ -3785,99 +3452,43 @@ def _span_state_ingest_driver(
         (d, s_) for d, s_, h in zip(span_doc, span_start, span_h)
         if h in dup_h
     ]
-    retro: list = []
-    if present["spans"]:
-        crossed = {h for h, co in dup_h.items() if co < min_count}
-        if crossed:
-            sp = SS.read_store_arrow(
-                state_path + "/spans", committed, "_ph", phs,
-                columns=["h", "doc_id", "start"],
-            )
-            if sp is not None:
-                retro = [
-                    (d, s_) for h, d, s_ in zip(
-                        sp.column("h").to_pylist(),
-                        sp.column("doc_id").to_pylist(),
-                        sp.column("start").to_pylist(),
-                    ) if h in crossed
-                ]
+    crossed = {h for h, co in dup_h.items() if co < min_count}
+    retro = [
+        (d, s_) for h, d, s_ in zip(*SS.read_store_columns(
+            state_path + "/spans", committed, ["h", "doc_id", "start"],
+            "_ph", phs))
+        if h in crossed
+    ] if crossed else []
     delta_flags = new_flags + retro
 
-    if not had_meta:
-        _write_state_meta(spark, state_path,
-                          {"n": int(n), "min_count": int(min_count)})
     # manifest commit: same append order/seam as the distributed path
     # (tokens, spans, hcounts, flags; publish LAST)
     import pyarrow as pa
 
-    dv = SS.new_delivery_id()
-    tokens_tbl = pa.table({
-        "_dv": pa.array([dv] * n_delta, pa.int64()),
-        "doc_id": pa.array(doc_ids, pa.int64()),
-        "n_tokens": pa.array(
-            [None if v is None else int(v) for v in ntoks], pa.int32()
-        ),
-    })
-    SS.append_store(tokens_tbl, state_path + "/tokens", ("_dv",),
-                    small=True)
-    spans_tbl = pa.table({
-        "_dv": pa.array([dv] * len(span_doc), pa.int64()),
-        "_ph": pa.array(span_ph, pa.int32()),
-        "h": pa.array(span_h, pa.string()),
-        "doc_id": pa.array(span_doc, pa.int64()),
-        "start": pa.array(span_start, pa.int32()),
-    })
-    SS.append_store(spans_tbl, state_path + "/spans", ("_dv", "_ph"),
-                    small=True, sort_by=("h",))
     hkeys = sorted(delta_counts)
-    hcounts_tbl = pa.table({
-        "_dv": pa.array([dv] * len(hkeys), pa.int64()),
-        "_ph": pa.array([h_ph[h] for h in hkeys], pa.int32()),
-        "h": pa.array(hkeys, pa.string()),
-        "c": pa.array([delta_counts[h] for h in hkeys], pa.int64()),
-    })
-    SS.append_store(hcounts_tbl, state_path + "/hcounts", ("_dv", "_ph"),
-                    small=True, sort_by=("h",))
-    flags_tbl = pa.table({
-        "_dv": pa.array([dv] * len(delta_flags), pa.int64()),
-        "doc_id": pa.array([d for d, _ in delta_flags], pa.int64()),
-        "start": pa.array([s_ for _, s_ in delta_flags], pa.int32()),
-    })
-    SS.append_store(flags_tbl, state_path + "/flags", ("_dv",),
-                    small=True)
-    SS.publish_commit(spark, state_path, dv)  # THE commit point
+    SS.commit_delivery(spark, state_path, [
+        ("tokens", {"doc_id": pa.array(doc_ids, pa.int64()),
+                    "n_tokens": pa.array(ntoks, pa.int32())}, (), ()),
+        ("spans", {"_ph": pa.array(span_ph, pa.int32()),
+                   "h": pa.array(span_h, pa.string()),
+                   "doc_id": pa.array(span_doc, pa.int64()),
+                   "start": pa.array(span_start, pa.int32())},
+         ("_ph",), ("h",)),
+        ("hcounts", {"_ph": pa.array([h_ph[h] for h in hkeys], pa.int32()),
+                     "h": pa.array(hkeys, pa.string()),
+                     "c": pa.array([delta_counts[h] for h in hkeys],
+                                   pa.int64())},
+         ("_ph",), ("h",)),
+        ("flags", {"doc_id": pa.array([d for d, _ in delta_flags], pa.int64()),
+                   "start": pa.array([s_ for _, s_ in delta_flags],
+                                     pa.int32())}, (), ()),
+    ], meta=None if had_meta else params)
 
     if not return_full:
         return spark.createDataFrame(
             delta_flags or [], "doc_id long, start int"
         )
-    # driver-side resolve: committed tokens/flags + this delivery
-    old_tok_pairs: list = []
-    old_flag_pairs: list = []
-    if present["tokens"]:
-        tok_t = SS.read_store_arrow(
-            state_path + "/tokens", committed,
-            columns=["doc_id", "n_tokens"],
-        )
-        if tok_t is not None:
-            old_tok_pairs = list(zip(tok_t.column("doc_id").to_pylist(),
-                                     tok_t.column("n_tokens").to_pylist()))
-    if present["flags"]:
-        fl_t = SS.read_store_arrow(
-            state_path + "/flags", committed,
-            columns=["doc_id", "start"],
-        )
-        if fl_t is not None:
-            old_flag_pairs = list(zip(fl_t.column("doc_id").to_pylist(),
-                                      fl_t.column("start").to_pylist()))
-    tbl = _span_resolved_table(
-        old_tok_pairs + list(zip(doc_ids, ntoks)),
-        old_flag_pairs + delta_flags,
-        meta_n,
-    )
-    if tbl.num_rows <= _DRIVER_RESOLVE_ROWS:
-        return spark.createDataFrame(tbl)
-    return read_span_state(spark, state_path).localCheckpoint(eager=True)
+    return _resolve(zip(doc_ids, ntoks), delta_flags)
 
 
 def _span_state_ingest_impl(
@@ -3938,23 +3549,14 @@ def _span_state_ingest_impl(
     ``commits`` ledger — same protocol and guarantees as
     :func:`dedup_state_ingest`.
     """
-    import warnings
-
     spark = new_docs.sparkSession
-    had_meta = _guard_state_meta(
-        spark, state_path, "span_state_ingest",
-        {"n": int(n), "min_count": int(min_count)},
+    params = {"n": int(n), "min_count": int(min_count)}
+    # migration NOT gated on had_meta: r10 span states have meta but
+    # flat hcounts
+    had_meta = _adopt_state_format(
+        spark, state_path, "span_state_ingest", params, "tokens",
+        _migrate_span_state, migrate_always=True,
     )
-    # NOT gated on had_meta: r10 span states have meta but flat hcounts
-    _migrate_span_state(spark, state_path)
-    if not had_meta and _try_parquet(spark, state_path + "/tokens") is not None:
-        warnings.warn(
-            f"span_state_ingest: adopting this call's format parameters "
-            f"(n={n}, min_count={min_count}) for the legacy state at "
-            f"{state_path} — they become the state FORMAT and every "
-            f"later ingest must match",
-            stacklevel=2,
-        )
     committed = SS.adopt_commit_ledger(
         spark, state_path, ("tokens", "spans", "hcounts", "flags")
     )
@@ -3985,111 +3587,107 @@ def _span_state_ingest_impl(
             return read_span_state(spark, state_path).localCheckpoint(
                 eager=True
             )
-        return spark.createDataFrame([], "doc_id long, start long")
+        return spark.createDataFrame([], "doc_id long, start int")
     small = n_delta < 1_000_000
-    if small:
-        # AQE off for the delta-bounded probe section (through the
-        # appends; restored before the corpus-scale resolve, and by the
-        # public wrapper on any exit) — the dedup_state_ingest
-        # discipline. Gated on delta size, not local mode.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        incoming = incoming.coalesce(8)  # narrow view, no extra job
+    # AQE off for the delta-bounded probe section (through the appends;
+    # the scope restores it for the corpus-scale resolve below, and on
+    # any exit) — the dedup_state_ingest discipline. Gated on delta
+    # size, not local mode.
+    with _no_aqe(spark, enabled=small):
+        if small:
+            incoming = incoming.coalesce(8)  # narrow view, no extra job
 
-    sh = span_hash_table(
-        incoming, n=n, text_col="_text", id_col="doc_id"
-    ).localCheckpoint(eager=True)  # delta-sized; probed three ways below
-    delta_counts = sh.groupBy("h").agg(F.count("*").alias("_cd"))
-    # the delta's hash buckets (≤N_BAND_BUCKETS values) — the partition
-    # filter for BOTH corpus-side probes below; crossed hashes are a
-    # subset of the delta's hashes, so one list covers the retro probe
-    with _no_aqe(spark, enabled=not small):
-        phs = sorted({
-            r[0] for r in sh.select(
-                F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS))
-                .cast("int").alias("_ph")
-            ).distinct().collect()
-        })
-    # schema'd read is safe here: _migrate_span_state above guarantees
-    # the _ph layout, so the legacy "_ph in columns" check below is
-    # vacuously true post-migration
-    old_counts = SS.visible(
-        _try_parquet(spark, state_path + "/hcounts", _SPAN_HCOUNTS_SCHEMA),
-        committed,
-    )
-    if old_counts is not None:
-        if "_ph" in old_counts.columns:  # pre-r11 stores lack the layout
-            old_counts = old_counts.where(F.col("_ph").isin(phs))
-        old_for = (
-            old_counts.join(delta_counts.select("h"), "h", "left_semi")
-            .groupBy("h").agg(F.sum("c").alias("_co"))
+        sh = span_hash_table(
+            incoming, n=n, text_col="_text", id_col="doc_id"
+        ).localCheckpoint(eager=True)  # delta-sized; probed three ways below
+        delta_counts = sh.groupBy("h").agg(F.count("*").alias("_cd"))
+        # the delta's hash buckets (≤N_BAND_BUCKETS values) — the partition
+        # filter for BOTH corpus-side probes below; crossed hashes are a
+        # subset of the delta's hashes, so one list covers the retro probe
+        with _no_aqe(spark, enabled=not small):
+            phs = sorted({
+                r[0] for r in sh.select(
+                    F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS))
+                    .cast("int").alias("_ph")
+                ).distinct().collect()
+            })
+        # schema'd read is safe here: _migrate_span_state above guarantees
+        # the _ph layout, so the legacy "_ph in columns" check below is
+        # vacuously true post-migration
+        old_counts = SS.visible(
+            _try_parquet(spark, state_path + "/hcounts", _SPAN_HCOUNTS_SCHEMA),
+            committed,
         )
-        tot = delta_counts.join(old_for, "h", "left").select(
-            "h", "_cd", F.coalesce("_co", F.lit(0)).alias("_co")
-        )
-    else:
-        tot = delta_counts.withColumn("_co", F.lit(0))
-    dup_h = tot.filter(F.col("_cd") + F.col("_co") >= min_count) \
-        .localCheckpoint(eager=True)
-    # (a) delta windows whose hash is globally duplicated
-    new_flags = sh.join(dup_h.select("h"), "h", "left_semi") \
-        .select("doc_id", "start")
-    # (b) OLD windows whose hash crossed min_count with THIS delivery —
-    # they were below the bar before, so they have never been flagged
-    old_spans = SS.visible(
-        _try_parquet(spark, state_path + "/spans", _SPAN_SPANS_SCHEMA),
-        committed,
-    )
-    if old_spans is not None:
-        crossed = dup_h.filter(F.col("_co") < min_count).select("h")
-        retro = (
-            old_spans.where(F.col("_ph").isin(phs))  # partition filter
-            .join(crossed, "h", "left_semi")
+        if old_counts is not None:
+            if "_ph" in old_counts.columns:  # pre-r11 stores lack the layout
+                old_counts = old_counts.where(F.col("_ph").isin(phs))
+            old_for = (
+                old_counts.join(delta_counts.select("h"), "h", "left_semi")
+                .groupBy("h").agg(F.sum("c").alias("_co"))
+            )
+            tot = delta_counts.join(old_for, "h", "left").select(
+                "h", "_cd", F.coalesce("_co", F.lit(0)).alias("_co")
+            )
+        else:
+            tot = delta_counts.withColumn("_co", F.lit(0))
+        dup_h = tot.filter(F.col("_cd") + F.col("_co") >= min_count) \
+            .localCheckpoint(eager=True)
+        # (a) delta windows whose hash is globally duplicated
+        new_flags = sh.join(dup_h.select("h"), "h", "left_semi") \
             .select("doc_id", "start")
+        # (b) OLD windows whose hash crossed min_count with THIS delivery —
+        # they were below the bar before, so they have never been flagged
+        old_spans = SS.visible(
+            _try_parquet(spark, state_path + "/spans", _SPAN_SPANS_SCHEMA),
+            committed,
         )
-        delta_flags = new_flags.unionByName(retro)
-    else:
-        delta_flags = new_flags
-    delta_flags = delta_flags.localCheckpoint(eager=True)
+        if old_spans is not None:
+            crossed = dup_h.filter(F.col("_co") < min_count).select("h")
+            retro = (
+                old_spans.where(F.col("_ph").isin(phs))  # partition filter
+                .join(crossed, "h", "left_semi")
+                .select("doc_id", "start")
+            )
+            delta_flags = new_flags.unionByName(retro)
+        else:
+            delta_flags = new_flags
+        delta_flags = delta_flags.localCheckpoint(eager=True)
 
-    if not had_meta:
-        # meta BEFORE the appends: a crash here leaves a meta-only
-        # state ≡ bootstrap with the format pinned (benign)
-        _write_state_meta(spark, state_path,
-                          {"n": int(n), "min_count": int(min_count)})
-    # manifest commit: appends tagged _dv=<delivery id>, published LAST.
-    # Small deliveries land via append_store's driver-side Arrow path
-    # (no Spark committer staging per append); large deliveries keep
-    # the distributed writes.
-    dv = SS.new_delivery_id()
-    tag = F.lit(dv).alias("_dv")
-    tok_rows = incoming.select(tag, "doc_id", "n_tokens")
-    SS.append_store(tok_rows, state_path + "/tokens", ("_dv",), small=small)
-    spans_out = sh.select(
-        tag,
-        F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS)).cast("int").alias("_ph"),
-        "h", "doc_id", "start",
-    )
-    if not small:
-        spans_out = spans_out.repartition("_ph").sortWithinPartitions("h")
-    SS.append_store(spans_out, state_path + "/spans", ("_dv", "_ph"),
-                    small=small, sort_by=("h",))
-    counts_out = delta_counts.select(
-        tag,
-        F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS)).cast("int").alias("_ph"),
-        "h", F.col("_cd").alias("c"),
-    )
-    if not small:
-        counts_out = counts_out.repartition("_ph").sortWithinPartitions("h")
-    SS.append_store(counts_out, state_path + "/hcounts", ("_dv", "_ph"),
-                    small=small, sort_by=("h",))
-    SS.append_store(
-        delta_flags.select(tag, "doc_id", "start"),
-        state_path + "/flags", ("_dv",), small=small,
-    )
+        if not had_meta:
+            # meta BEFORE the appends: a crash here leaves a meta-only
+            # state ≡ bootstrap with the format pinned (benign)
+            SS.write_meta(state_path, params)
+        # manifest commit: appends tagged _dv=<delivery id>, published LAST.
+        # Small deliveries land via append_store's driver-side Arrow path
+        # (no Spark committer staging per append); large deliveries keep
+        # the distributed writes.
+        dv = SS.new_delivery_id()
+        tag = F.lit(dv).alias("_dv")
+        tok_rows = incoming.select(tag, "doc_id", "n_tokens")
+        SS.append_store(tok_rows, state_path + "/tokens", ("_dv",), small=small)
+        spans_out = sh.select(
+            tag,
+            F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS)).cast("int").alias("_ph"),
+            "h", "doc_id", "start",
+        )
+        if not small:
+            spans_out = spans_out.repartition("_ph").sortWithinPartitions("h")
+        SS.append_store(spans_out, state_path + "/spans", ("_dv", "_ph"),
+                        small=small, sort_by=("h",))
+        counts_out = delta_counts.select(
+            tag,
+            F.pmod(F.xxhash64("h"), F.lit(N_BAND_BUCKETS)).cast("int").alias("_ph"),
+            "h", F.col("_cd").alias("c"),
+        )
+        if not small:
+            counts_out = counts_out.repartition("_ph").sortWithinPartitions("h")
+        SS.append_store(counts_out, state_path + "/hcounts", ("_dv", "_ph"),
+                        small=small, sort_by=("h",))
+        SS.append_store(
+            delta_flags.select(tag, "doc_id", "start"),
+            state_path + "/flags", ("_dv",), small=small,
+        )
     SS.publish_commit(spark, state_path, dv)  # THE commit point
-    if small:
-        # corpus-scale resolve below — AQE back on
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     if not return_full:
         return delta_flags
     return read_span_state(spark, state_path).localCheckpoint(eager=True)

@@ -43,9 +43,8 @@ def _collect_queries(qn: DataFrame, limit: int = MAX_COLLECT_QUERIES):
     """Driver-guarded collect of an ANN query side (the Q≪N contract of
     the LUT/closure paths): raises with a clear remedy instead of
     silently OOMing the driver when handed a corpus-sized frame."""
-    with SS._no_aqe(qn.sparkSession, limit_rows=limit):  # probe: one job
-        rows = qn.limit(limit + 1).collect()
-    if len(rows) > limit:
+    rows = SS.collect_capped_rows(qn, limit)
+    if rows is None:
         raise ValueError(
             f"ANN query side exceeds the Q<<N contract ({limit} rows): "
             "batch the queries (or use knn_brute strategy='expr' for "
@@ -69,9 +68,8 @@ def _resolve_scan_strategy(qn: DataFrame, strategy: str, limit: int):
         return "numpy", _collect_queries(qn, limit)
     if strategy != "auto":  # expr, or an explicit select_k merge strategy
         return strategy, None
-    with SS._no_aqe(qn.sparkSession, limit_rows=limit):  # probe: one job
-        rows = qn.limit(limit + 1).collect()
-    if len(rows) > limit:
+    rows = SS.collect_capped_rows(qn, limit)
+    if rows is None:
         return "expr", None  # degrade gracefully, never OOM the driver
     return "numpy", rows
 
@@ -531,20 +529,20 @@ def _dbscan_driver_finish(df, pairs, min_pts: int, id_col: str):
     from raft_spark.operators.solvers import driver_union_find
 
     spark = df.sparkSession
-    with SS._no_aqe(spark, limit_rows=_DRIVER_LABEL_IDS):
-        t = (df.select(F.col(id_col).cast("long").alias("id"))
-             .limit(_DRIVER_LABEL_IDS + 1).toArrow())
-    if t.num_rows > _DRIVER_LABEL_IDS:
+    t = SS.collect_capped(
+        df.select(F.col(id_col).cast("long").alias("id")), _DRIVER_LABEL_IDS)
+    if t is None:
         return None
     ids = t.column("id").to_pylist()
     if any(i is None for i in ids):
         return None
     canon: set = set()
-    for r in pairs.select("a", "b").collect():  # LocalTableScan
-        a, b = r[0], r[1]
+    # endpoints cast by Spark exactly like the distributed
+    # canonicalization (a string "01" is the id 1 there too)
+    for a, b in pairs.select(F.col("a").cast("long"),
+                             F.col("b").cast("long")).collect():
         if a is None or b is None or a == b:
             continue
-        a, b = int(a), int(b)
         canon.add((a, b) if a < b else (b, a))
     deg: dict = {}
     for a, b in canon:
@@ -598,9 +596,8 @@ def _eps_pairs_driver(qdf, id_col: str, vec_col: str, eps_q: int):
     import pyarrow as pa
 
     spark = qdf.sparkSession
-    with SS._no_aqe(spark, limit_rows=_DRIVER_EPS_ROWS):
-        t = qdf.limit(_DRIVER_EPS_ROWS + 1).toArrow()
-    if t.num_rows > _DRIVER_EPS_ROWS:
+    t = SS.collect_capped(qdf, _DRIVER_EPS_ROWS)
+    if t is None:
         return None
     if t.num_rows < 2:
         return spark.createDataFrame([], "a long, b long")
@@ -948,7 +945,7 @@ def single_linkage(
     from raft_spark.operators.reductions import global_rank
     from raft_spark.operators.solvers import (
         connected_components, connected_components_auto, driver_union_find,
-        probe_edges_driver,
+        labels_frame, probe_edges_driver,
     )
 
     if (n_clusters is None) == (distance_threshold is None):
@@ -989,9 +986,8 @@ def single_linkage(
                 (int(r["row"]), int(r["col"])) for r in probe
             )
             spark = df.sparkSession
-            with SS._no_aqe(spark, limit_rows=_DRIVER_LABEL_IDS):
-                t = ids.limit(_DRIVER_LABEL_IDS + 1).toArrow()
-            if t.num_rows <= _DRIVER_LABEL_IDS:
+            t = SS.collect_capped(ids, _DRIVER_LABEL_IDS)
+            if t is not None:
                 idl = t.column("id").to_pylist()
                 if not any(i is None for i in idl):
                     import pyarrow as pa
@@ -1001,8 +997,7 @@ def single_linkage(
                         "cluster": pa.array(
                             [lab.get(i, i) for i in idl], pa.int64()),
                     }))
-            labels = spark.createDataFrame(
-                list(lab.items()), "node long, label long")
+            labels = labels_frame(spark, lab)
         else:
             labels = connected_components(
                 kept.withColumn("value", F.lit(1.0))

@@ -757,9 +757,8 @@ def mst_edges_auto(
         .filter(F.col("row") < F.col("col"))
     # one probe job (the connected_components_auto discipline): under
     # the threshold the collected rows ARE the edge table
-    with SS._no_aqe(coo.sparkSession, limit_rows=driver_threshold):
-        rows = edges.limit(driver_threshold + 1).collect()
-    if len(rows) > driver_threshold:
+    rows = SS.collect_capped_rows(edges, driver_threshold)
+    if rows is None:
         return mst_edges(
             edges.localCheckpoint(eager=True), max_rounds=max_rounds
         )
@@ -820,10 +819,9 @@ def triangle_count(coo: DataFrame, driver_threshold: int = 500_000) -> int:
     )
     # one probe job: under the threshold the collected rows ARE the
     # canonical edge table (the connected_components_auto discipline)
-    with SS._no_aqe(coo.sparkSession, limit_rows=driver_threshold):
-        rows = e.limit(driver_threshold + 1).collect()
-    n_edges = len(rows)
-    if 0 < n_edges <= driver_threshold:
+    rows = SS.collect_capped_rows(e, driver_threshold)
+    n_edges = len(rows or ())
+    if n_edges:
         a = np.fromiter((r["a"] for r in rows), np.int64, n_edges)
         b = np.fromiter((r["b"] for r in rows), np.int64, n_edges)
         node_ids = np.unique(np.concatenate([a, b]))
@@ -938,22 +936,30 @@ def connected_components_auto(
     labels = driver_union_find(
         (int(row["row"]), int(row["col"])) for row in probe
     )
-    return coo.sparkSession.createDataFrame(
-        list(labels.items()), "node long, label long"
-    )
+    return labels_frame(coo.sparkSession, labels)
+
+
+def labels_frame(spark, labels: dict[int, int]) -> DataFrame:
+    """{node: label} → a (node long, label long) frame built from two
+    Arrow int64 columns (an Arrow-backed local relation — no per-row
+    pickling of the label map)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "node": pa.array(list(labels), pa.int64()),
+        "label": pa.array(list(labels.values()), pa.int64()),
+    }))
 
 
 def probe_edges_driver(coo: DataFrame, driver_threshold: int = 500_000):
     """The ONE-job edge probe shared by :func:`connected_components_auto`
-    and driver-finish consumers (dedup.dedup_clusters): collects
-    ``limit(threshold+1)`` self-loop-filtered (row, col) rows — the
-    collected rows ARE the edge table when they fit; returns None above
-    the threshold (the caller runs the distributed solve)."""
+    and driver-finish consumers (dedup.dedup_clusters): the
+    self-loop-filtered (row, col) rows through
+    :func:`statestore.collect_capped_rows` — the collected rows ARE the
+    edge table when they fit; None above the threshold (the caller runs
+    the distributed solve)."""
     edges = coo.select("row", "col").filter(F.col("row") != F.col("col"))
-    with SS._no_aqe(coo.sparkSession,  # probe: one job, not per AQE stage
-                    limit_rows=driver_threshold):
-        probe = edges.limit(driver_threshold + 1).collect()
-    return None if len(probe) > driver_threshold else probe
+    return SS.collect_capped_rows(edges, driver_threshold)
 
 
 def driver_union_find(pairs) -> dict[int, int]:
@@ -1174,9 +1180,8 @@ def pagerank_exact(
     # one probe job (CollectLimit short-circuits at scale): under the
     # threshold the collected rows ARE the edge table — no separate
     # checkpoint/count/collect triple
-    with SS._no_aqe(coo.sparkSession, limit_rows=driver_threshold):
-        rows = edges.limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
+    rows = SS.collect_capped_rows(edges, driver_threshold)
+    if rows is not None:
         if not rows:
             return coo.sparkSession.createDataFrame(
                 [], "node long, rank_int long"

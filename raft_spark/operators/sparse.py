@@ -681,51 +681,37 @@ def _postings_add_driver(new_coo: DataFrame, path: str) -> bool:
         "row", "col", "value",
         F.pmod(F.xxhash64("col"), F.lit(n_shards)).alias("_shard"),
     )
-    with SS._no_aqe(spark, limit_rows=_DRIVER_DELTA_NNZ):
-        t = probe.limit(_DRIVER_DELTA_NNZ + 1).toArrow()
-    if t.num_rows > _DRIVER_DELTA_NNZ:
+    t = SS.collect_capped(probe, _DRIVER_DELTA_NNZ)
+    if t is None:
         return False
     import pyarrow as pa
 
-    reg = SS.read_store_arrow(path + "/norms", committed, columns=["row"])
-    if reg is not None:
-        seen = set(reg.column("row").to_pylist())
-        if seen:
-            keep = [i for i, r in enumerate(t.column("row").to_pylist())
-                    if r not in seen]
-            if len(keep) < t.num_rows:
-                t = t.take(pa.array(keep, pa.int64()))
+    keep = SS.replay_keep(path + "/norms", committed,
+                          t.column("row").to_pylist(), "row")
+    if keep is not None:
+        t = t.take(pa.array(keep, pa.int64()))
     rows = t.column("row").to_pylist()
     if any(r is None for r in rows):
         return False  # null row ids: sorted(nz) below would compare
         # None with int; the distributed groupBy('row') tolerates them
         # and writes a null-row norm row — keep that shape there (the
         # null/duplicate-id gate discipline of the dedup driver paths)
-    vals = t.column("value").to_pylist()
-    dv = SS.new_delivery_id()
-    postings_tbl = pa.table({
-        "_dv": pa.array([dv] * t.num_rows, pa.int64()),
-        "_shard": t.column("_shard"),
-        "col": t.column("col"), "row": t.column("row"),
-        "value": t.column("value"),
-    })
-    SS.append_store(postings_tbl, f"{path}/postings", ("_dv", "_shard"),
-                    small=True, sort_by=("col", "row"))
     nn: dict = {}
     nz: dict = {}
-    for r, v in zip(rows, vals):
+    for r, v in zip(rows, t.column("value").to_pylist()):
         nz[r] = nz.get(r, 0) + 1
         if v is not None:  # Spark sum skips nulls, count does not
             nn[r] = nn.get(r, 0.0) + v * v
     rkeys = sorted(nz)
-    norms_tbl = pa.table({
-        "_dv": pa.array([dv] * len(rkeys), pa.int64()),
-        "row": pa.array(rkeys, pa.int64()),
-        "_nn": pa.array([nn.get(r) for r in rkeys], pa.float64()),
-        "_nz": pa.array([nz[r] for r in rkeys], pa.int64()),
-    })
-    SS.append_store(norms_tbl, f"{path}/norms", ("_dv",), small=True)
-    SS.publish_commit(spark, path, dv)  # THE commit point
+    SS.commit_delivery(spark, path, [
+        ("postings", {"_shard": t.column("_shard"), "col": t.column("col"),
+                      "row": t.column("row"), "value": t.column("value")},
+         ("_shard",), ("col", "row")),
+        ("norms", {"row": pa.array(rkeys, pa.int64()),
+                   "_nn": pa.array([nn.get(r) for r in rkeys], pa.float64()),
+                   "_nz": pa.array([nz[r] for r in rkeys], pa.int64())},
+         (), ()),
+    ])
     return True
 
 
@@ -748,37 +734,24 @@ def compact_postings(spark, path: str) -> int:
         spark.read.schema(_POSTINGS_SCHEMA).parquet(f"{path}/postings"),
         committed,
     )
-    p_out = postings.select(zero, "_shard", "col", "row", "value")
-    # small stores (footer-walk upper bound on the visible rows) rewrite
-    # via one Arrow collect + driver-side file writes — the
-    # compact_dedup_state discipline
-    small_p = SS.store_row_count(f"{path}/postings") < SS.SMALL_STORE_ROWS
-    if small_p:
-        n_postings = SS.compact_store_driver(
-            p_out, f"{path}/postings.__new", ("_dv", "_shard"),
-            sort_by=("col", "row"))
-    else:
-        p_out.repartition("_shard").sortWithinPartitions("col", "row") \
-            .write.mode("overwrite").partitionBy("_dv", "_shard") \
-            .parquet(f"{path}/postings.__new")
-    SS.swap_in(f"{path}/postings.__new", f"{path}/postings")
-    n_out = SS.visible(
-        spark.read.schema(_NORMS_SCHEMA).parquet(f"{path}/norms"),
-        committed,
-    ).select(zero, "row", "_nn", "_nz")
-    if SS.store_row_count(f"{path}/norms") < SS.SMALL_STORE_ROWS:
-        SS.compact_store_driver(n_out, f"{path}/norms.__new", ("_dv",))
-    else:
-        n_out.coalesce(max(1, spark.sparkContext.defaultParallelism // 8)) \
-            .write.mode("overwrite").partitionBy("_dv") \
-            .parquet(f"{path}/norms.__new")
-    SS.swap_in(f"{path}/norms.__new", f"{path}/norms")
+    n_postings = SS.compact_leg(
+        f"{path}/postings",
+        postings.select(zero, "_shard", "col", "row", "value"),
+        ("_dv", "_shard"), sort_by=("col", "row"),
+        shape=lambda o: o.repartition("_shard")
+        .sortWithinPartitions("col", "row"),
+    )
+    n_par = max(1, spark.sparkContext.defaultParallelism // 8)
+    SS.compact_leg(
+        f"{path}/norms",
+        SS.visible(
+            spark.read.schema(_NORMS_SCHEMA).parquet(f"{path}/norms"),
+            committed,
+        ).select(zero, "row", "_nn", "_nz"),
+        ("_dv",), shape=lambda o: o.coalesce(n_par),
+    )
     SS.reset_ledger(spark, path, [0])
-    if small_p:
-        return n_postings
-    # row count from the rewritten files' parquet footers — a
-    # driver-side metadata walk, not another scheduled scan
-    return SS.store_row_count(f"{path}/postings")
+    return n_postings
 
 
 def sparse_lookup(

@@ -71,6 +71,13 @@ __all__ = [
     "swap_in",
     "read_meta",
     "write_meta",
+    "collect_capped",
+    "collect_capped_rows",
+    "driver_state_gate",
+    "replay_keep",
+    "commit_delivery",
+    "compact_leg",
+    "read_store_columns",
 ]
 
 
@@ -163,13 +170,17 @@ class _no_aqe:
     below the cap (local[32] at every T used here) is untouched — the
     one-job behavior at sf scale is preserved. Oversized-but-under-
     threshold inputs on a capped cluster session pay the default ×4
-    escalation passes instead, each bounded by the same budget."""
+    escalation passes instead, each bounded by the same budget.
+    Nested capped sections compose: the tightest open cap is in force
+    (an inner probe with a larger ``limit_rows`` lowers the count while
+    it is open), and the outer value comes back when it closes."""
 
     _lock = threading.Lock()
     _depth = 0
     _outer_prev = "true"
-    _lim_depth = 0
-    _lim_prev: str | None = None
+    _lim_caps: list[int] = []  # caps of the open limit_rows sections
+    _lim_prev: str | None = None  # the session's own value
+    _lim_cur: str | None = None  # the value currently set
 
     PROBE_ROW_BUDGET = 20_000_000
     _LIMIT_CONF = "spark.sql.limit.initialNumPartitions"
@@ -190,14 +201,13 @@ class _no_aqe:
                                         "false")
                 cls._depth += 1
         if self.limit_rows:
-            cap = max(32, cls.PROBE_ROW_BUDGET // max(self.limit_rows, 1))
+            self._cap = max(32, cls.PROBE_ROW_BUDGET // self.limit_rows)
             with cls._lock:
-                if cls._lim_depth == 0:
-                    prev = self.spark.conf.get(cls._LIMIT_CONF, None)
-                    cls._lim_prev = prev
-                    if prev is not None and int(prev) > cap:
-                        self.spark.conf.set(cls._LIMIT_CONF, str(cap))
-                cls._lim_depth += 1
+                if not cls._lim_caps:
+                    cls._lim_prev = cls._lim_cur = self.spark.conf.get(
+                        cls._LIMIT_CONF, None)
+                cls._lim_caps.append(self._cap)
+                cls._apply_limit(self.spark)
         return self
 
     def __exit__(self, *exc):
@@ -210,10 +220,48 @@ class _no_aqe:
                                         cls._outer_prev)
         if self.limit_rows:
             with cls._lock:
-                cls._lim_depth -= 1
-                if cls._lim_depth == 0 and cls._lim_prev is not None:
-                    self.spark.conf.set(cls._LIMIT_CONF, cls._lim_prev)
+                cls._lim_caps.remove(self._cap)
+                cls._apply_limit(self.spark)
         return False
+
+    @classmethod
+    def _apply_limit(cls, spark) -> None:
+        """Set the first-pass partition count to the tightest open cap,
+        or back to the session's own value when none is open (a session
+        already below every cap is never written). Called under
+        ``_lock``."""
+        want = cls._lim_prev
+        if want is not None and cls._lim_caps:
+            want = str(min([int(want)] + cls._lim_caps))
+        if want != cls._lim_cur:
+            spark.conf.set(cls._LIMIT_CONF, want)
+            cls._lim_cur = want
+
+
+def _collect_capped(df: DataFrame, cap: int, action):
+    with _no_aqe(df.sparkSession, limit_rows=cap):
+        out = action(df.limit(cap + 1))
+    return None if len(out) > cap else out
+
+
+def collect_capped(df: DataFrame, cap: int):
+    """THE driver-strategy probe: ONE ``limit(cap+1)`` Arrow collect
+    under :class:`_no_aqe` (one job, first pass bounded by
+    ``limit_rows=cap``). Returns the pyarrow Table when the frame has at
+    most ``cap`` rows — the rows ARE the frame, ready for the driver
+    rendering — or None when it overflows (the caller takes its
+    distributed path; the probe cost is O(cap)). Caps are measured row
+    counts held as module constants at each call site and passed at
+    call time."""
+    return _collect_capped(df, cap, lambda d: d.toArrow())
+
+
+def collect_capped_rows(df: DataFrame, cap: int):
+    """:func:`collect_capped` returning a list of Rows. Keep Row sites
+    on this form: under ``_no_aqe`` a capped ``collect()`` is one job of
+    two stages, while ``toArrow()`` adds CollectLimit's single-partition
+    exchange stage."""
+    return _collect_capped(df, cap, lambda d: d.collect())
 
 
 def store_exists(store: str) -> bool:
@@ -459,6 +507,86 @@ def compact_store_driver(df: DataFrame, new_dir: str,
     return _append_store_driver(df, new_dir, partition_cols, sort_by)
 
 
+def compact_leg(store: str, out: DataFrame,
+                partition_cols: tuple[str, ...],
+                sort_by: tuple[str, ...] = (), shape=None) -> int:
+    """One compaction leg: rewrite ``store`` from ``out`` (its compacted
+    committed rows, ``_dv`` collapsed to 0) into ``store.__new`` and
+    :func:`swap_in`. A store under :data:`SMALL_STORE_ROWS` (footer
+    walk — an upper bound on the visible rows) rewrites driver-side via
+    :func:`compact_store_driver`: a distributed partitionBy write pays
+    ~1-3 s of committer staging to land a few MB. Larger stores take the
+    distributed ``partitionBy(...).mode("overwrite")`` write, with
+    ``shape`` (e.g. a repartition/sort) applied to ``out`` first.
+    Returns the leg's row count (the driver collect's size, or a footer
+    walk of the rewritten files — never another scheduled scan)."""
+    new = store + ".__new"
+    if store_row_count(store) < SMALL_STORE_ROWS:
+        n = compact_store_driver(out, new, partition_cols, sort_by)
+        swap_in(new, store)
+        return n
+    (out if shape is None else shape(out)).write \
+        .partitionBy(*partition_cols).mode("overwrite").parquet(new)
+    swap_in(new, store)
+    return store_row_count(store)
+
+
+def driver_state_gate(state_path: str, stores: tuple[str, ...],
+                      same_presence: tuple[str, ...] | None = None):
+    """The driver-ingest size gate shared by the driver-rendered state
+    ingests: the ``{store: present}`` map when every store is below
+    :data:`SMALL_STORE_ROWS` and the ``same_presence`` stores (default:
+    all) are either all present or all absent; None otherwise (a
+    corpus-scale store, or a mid-migration/legacy shape — the
+    distributed path sorts those out). Driver-side checks only."""
+    for s in stores:
+        if store_row_count(state_path + "/" + s) >= SMALL_STORE_ROWS:
+            return None
+    present = {s: os.path.isdir(state_path + "/" + s) for s in stores}
+    if len({present[s] for s in same_presence or stores}) > 1:
+        return None
+    return present
+
+
+def replay_keep(store: str, committed: list[int] | None, ids: list,
+                id_col: str, part_col: str | None = None,
+                part_vals=None) -> list[int] | None:
+    """Driver rendering of the replay anti-join: indices of ``ids`` NOT
+    already in the committed rows of the registry ``store`` (read
+    pruned to ``part_col IN part_vals`` when given — an id already in
+    the state lives in the same bucket, so the pruned read is exact).
+    Returns None when nothing is dropped, so the caller keeps its rows
+    as they are."""
+    seen = set(read_store_columns(store, committed, [id_col], part_col,
+                                  part_vals)[0])
+    keep = [i for i, d in enumerate(ids) if d not in seen]
+    return keep if len(keep) < len(ids) else None
+
+
+def commit_delivery(spark, state_path: str, appends, meta=None) -> int:
+    """Land one driver-rendered delivery under the manifest commit: the
+    ``meta`` format sidecar first when given (a crash after it leaves a
+    meta-only state, a bootstrap with its format pinned), then one
+    :func:`append_store` per ``(store, columns, partition_cols,
+    sort_by)`` in order, each an Arrow table tagged with a fresh
+    ``_dv`` (the first partition column), and the ledger publish LAST.
+    Returns the delivery id."""
+    import pyarrow as pa
+
+    if meta is not None:
+        write_meta(state_path, meta)
+    dv = new_delivery_id()
+    for store, cols, parts, sort_by in appends:
+        n = len(next(iter(cols.values())))
+        append_store(
+            pa.table({"_dv": pa.array([dv] * n, pa.int64()), **cols}),
+            state_path + "/" + store, ("_dv",) + parts, small=True,
+            sort_by=sort_by,
+        )
+    publish_commit(spark, state_path, dv)  # THE commit point
+    return dv
+
+
 def swap_in(new_dir: str, store: str) -> None:
     """Replace ``store`` with ``new_dir`` via rename (atomic on local
     POSIX): the old directory moves aside first, so a reader never sees
@@ -550,6 +678,19 @@ def read_store_arrow(store: str, committed: list[int] | None,
         col, values = filter_in
         t = t.filter(pc.is_in(t.column(col), value_set=pa.array(values)))
     return t
+
+
+def read_store_columns(store: str, committed: list[int] | None,
+                       columns: list[str], part_col: str | None = None,
+                       part_vals=None, **kw) -> list[list]:
+    """:func:`read_store_arrow` as one Python list per requested column
+    (empty lists when the store is absent or holds no matching rows) —
+    the form the driver-rendered ingests consume. ``part_col`` may be
+    requested when ``attach_part=True``."""
+    t = read_store_arrow(store, committed, part_col, part_vals,
+                         columns=[c for c in columns if c != part_col],
+                         **kw)
+    return [[] if t is None else t.column(c).to_pylist() for c in columns]
 
 
 def pure_dv_layout(store: str) -> bool:

@@ -585,6 +585,29 @@ def test_compact_span_state_preserves_resolution(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def _delta_parity(monkeypatch, ingest, batches, path):
+    """``return_full=False`` outputs of the driver and the
+    forced-distributed ingest of ``batches`` (bootstrap, merge, replay)
+    into fresh states: one (schema, sorted rows) pair per delivery and
+    path. Both paths must agree delivery by delivery, and every delivery
+    must return the same schema (a replay included)."""
+    def _run(p):
+        out = []
+        for b in batches:
+            df = ingest(b, p, return_full=False)
+            out.append((df.schema.simpleString(),
+                        sorted(map(tuple, df.collect()))))
+        return out
+
+    drv = _run(path + "_driver_delta")
+    monkeypatch.setattr(D, "DRIVER_DELTA_DOCS", 0)
+    dist = _run(path + "_dist_delta")
+    monkeypatch.undo()
+    assert drv == dist
+    assert len({schema for schema, _ in drv + dist}) == 1, drv + dist
+    assert drv[-1][1] == []  # the replay delivers nothing
+
+
 def test_driver_ingest_matches_distributed_stores(spark, sf_dir, tmp_path,
                                                   monkeypatch):
     """r13: the driver-rendered small-delta ingest must leave the state
@@ -632,6 +655,9 @@ def test_driver_ingest_matches_distributed_stores(spark, sf_dir, tmp_path,
                 for r in df.collect()
             ))
         assert rows[0] == rows[1], store
+
+    _delta_parity(monkeypatch, D.dedup_state_ingest, [b1, b2, b2],
+                  str(tmp_path / "d"))
 
 
 def test_semantic_driver_ingest_matches_distributed(spark, sf_dir, tmp_path,
@@ -682,6 +708,13 @@ def test_semantic_driver_ingest_matches_distributed(spark, sf_dir, tmp_path,
             ))
         assert rows[0] == rows[1], store
 
+    _delta_parity(
+        monkeypatch,
+        lambda b, p, **kw: D.semantic_state_ingest(
+            b, _axis_bucket(b), p, tau=0.8, **kw),
+        [b1, b2, b2], str(tmp_path / "s"),
+    )
+
 
 def test_span_driver_ingest_matches_distributed(spark, sf_dir, tmp_path,
                                                 monkeypatch):
@@ -729,6 +762,9 @@ def test_span_driver_ingest_matches_distributed(spark, sf_dir, tmp_path,
             df = spark.read.parquet(p + "/" + store).select(*cols)
             rows.append(Counter(tuple(r) for r in df.collect()))
         assert rows[0] == rows[1], store
+
+    _delta_parity(monkeypatch, D.span_state_ingest, [b1, b2, b2],
+                  str(tmp_path / "p"))
 
 
 def test_semantic_driver_ingest_null_cluster_falls_back(spark, sf_dir,

@@ -236,6 +236,7 @@ def test_dbscan_full_composition_plan(spark, sf_dir):
     # driver finish (r14): LocalRelation pairs at sf scale → the whole
     # composition returns as one local relation, zero exchanges
     pairs_drv = eps_pairs_exact(m, eps=1.2)
+    assert SIM._plan_is_local_relation(pairs_drv)
     rep_drv = audit_plan(dbscan(m, eps=1.2, min_pts=4, pairs=pairs_drv))
     assert rep_drv.n_exchanges == 0
     assert "Join" not in rep_drv.text

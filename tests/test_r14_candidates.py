@@ -162,6 +162,12 @@ def test_probe_limit_cap_sets_and_restores(spark):
             with SS._no_aqe(spark, limit_rows=500_000):
                 assert int(spark.conf.get(conf)) == inside
             assert int(spark.conf.get(conf)) == inside
+            # a nested probe with a LARGER row limit tightens the count
+            # to its own cap while open, and the outer cap comes back
+            with SS._no_aqe(spark, limit_rows=5_000_000):
+                assert int(spark.conf.get(conf)) == max(
+                    32, SS._no_aqe.PROBE_ROW_BUDGET // 5_000_000)
+            assert int(spark.conf.get(conf)) == inside
         assert spark.conf.get(conf) == big  # restored
         # a session already below the cap is untouched (one-job local
         # behavior preserved)
@@ -256,6 +262,33 @@ def test_dbscan_driver_finish_border_tie_and_isolated_core(
     rows = _dbscan_both_paths(spark, monkeypatch, df, pairs, min_pts=4)
     assert (20, 20, "core") in rows and (30, 30, "core") in rows
     assert (25, 20, "border") in rows  # min over adjacent core clusters
+
+
+def test_dbscan_driver_finish_casts_string_endpoints(spark, monkeypatch):
+    import pyarrow as pa
+
+    # string endpoints go through the same Spark long cast on both
+    # paths: "01" is the id 1, so ("1", "01") is a self loop, not an
+    # edge, and ("02", "3") joins 2 and 3
+    pairs = spark.createDataFrame(pa.table({
+        "a": pa.array(["1", "1", "02", "2", "5"], pa.string()),
+        "b": pa.array(["01", "2", "3", "4", "4"], pa.string()),
+    }))
+    assert SIM._plan_is_local_relation(pairs)
+    df = spark.createDataFrame(
+        [(i, [0.0]) for i in [1, 2, 3, 4, 5, 6]],
+        "id long, features array<double>",
+    )
+    drv = _none_safe_sort(SIM.dbscan(
+        df, eps=0.1, min_pts=3, pairs=pairs).collect())
+    with monkeypatch.context() as mp:
+        mp.setattr(SIM, "_DRIVER_LABEL_IDS", 0)
+        dist = _none_safe_sort(SIM.dbscan(
+            df, eps=0.1, min_pts=3, pairs=pairs).collect())
+    assert drv == dist
+    # core {2, 4}: 1 and 3 border 2, 5 borders 4 — all in cluster 2
+    assert (1, 2, "border") in drv and (5, 2, "border") in drv
+    assert (6, -1, "noise") in drv
 
 
 def test_dbscan_driver_finish_null_id_falls_back(spark, monkeypatch):
