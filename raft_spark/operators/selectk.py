@@ -20,7 +20,7 @@ physical plan is meaningfully worse than the reference's algorithm):
   running per-group top-k is folded over the Arrow batches, so task
   state is O(groups-present × k) rows — never O(|group|), no matter
   how skewed the group is (the round-2 salted variant's (group,salt)
-  collect_list still buffered |group|/num_salts rows and could OOM one
+  collect_list still buffered |group|/salts rows and could OOM one
   agg buffer on a hot key). Phase 2 merges the ≤ partitions·k
   survivors per group with one bounded groupBy. Shuffle volume after
   phase 1 is ≤ groups × partitions-holding-that-group × k rows. This
@@ -71,7 +71,6 @@ def select_k(
     ascending: bool = False,
     payload_cols: list[str] | None = None,
     strategy: str = "auto",
-    num_salts: int = 32,
 ) -> DataFrame:
     """Top-k rows per group → (group_cols…, payload_cols…, order_col, rank).
 

@@ -39,39 +39,30 @@ def _norm_table(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 MAX_COLLECT_QUERIES = 20_000
 
 
-def _collect_queries(qn: DataFrame, limit: int = MAX_COLLECT_QUERIES):
-    """Driver-guarded collect of an ANN query side (the Q≪N contract of
-    the LUT/closure paths): raises with a clear remedy instead of
-    silently OOMing the driver when handed a corpus-sized frame."""
+def _resolve_scan_strategy(qn: DataFrame, strategy: str, limit: int):
+    """ONE-JOB strategy resolution for the collected-query scans
+    (:func:`_topk_scan`): a single bounded ``limit(n+1).collect()`` both
+    PROBES the query-side size (strategy="auto" → numpy when it fits the
+    Q≪N contract, expr otherwise) and DELIVERS the rows the numpy path
+    ships as a closure. Returns (strategy, rows-or-None); rows is None
+    exactly when the expr path was chosen. strategy="numpy" raises with
+    a remedy on an oversized query side instead of silently OOMing the
+    driver when handed a corpus-sized frame."""
+    if strategy not in ("auto", "numpy", "expr"):
+        raise ValueError(
+            f"strategy {strategy!r} (one of 'auto', 'numpy', 'expr')")
+    if strategy == "expr":
+        return "expr", None
     rows = SS.collect_capped_rows(qn, limit)
-    if rows is None:
+    if rows is not None:
+        return "numpy", rows
+    if strategy == "numpy":
         raise ValueError(
             f"ANN query side exceeds the Q<<N contract ({limit} rows): "
             "batch the queries (or use knn_brute strategy='expr' for "
             "corpus-scale query sides)"
         )
-    return rows
-
-
-def _resolve_scan_strategy(qn: DataFrame, strategy: str, limit: int):
-    """ONE-JOB strategy resolution for the brute/quantized scans
-    (knn_brute / knn_bq / knn_sq): a single bounded
-    ``limit(n+1).collect()`` both PROBES the query-side size
-    (strategy="auto" → numpy when it fits the Q≪N contract, expr
-    otherwise) and DELIVERS the rows the numpy path ships as a closure
-    — the r11 auto path paid a distributed count() and then collected
-    the same frame again (one extra job per query batch). Returns
-    (strategy, rows-or-None); rows is None exactly when the expr path
-    was chosen. strategy="numpy" keeps :func:`_collect_queries`'
-    raise-with-remedy contract on oversized query sides."""
-    if strategy == "numpy":
-        return "numpy", _collect_queries(qn, limit)
-    if strategy != "auto":  # expr, or an explicit select_k merge strategy
-        return strategy, None
-    rows = SS.collect_capped_rows(qn, limit)
-    if rows is None:
-        return "expr", None  # degrade gracefully, never OOM the driver
-    return "numpy", rows
+    return "expr", None  # degrade gracefully, never OOM the driver
 
 
 def _blocked_cross(
@@ -482,10 +473,9 @@ def knn_refine(
 _DRIVER_EPS_ROWS = 16_384
 _DRIVER_EPS_MAX_PAIRS = 3_000_000
 
-# label-assembly driver-finish gate (dbscan / single_linkage threshold
-# mode — the dedup_clusters discipline): caps the one-job Arrow collect
-# of the id table (1M int64 ids = 8 MB). Measured data size, never
-# core count.
+# label-assembly driver-finish gate (dbscan — the dedup_clusters
+# discipline): caps the one-job Arrow collect of the id table (1M int64
+# ids = 8 MB). Measured data size, never core count.
 _DRIVER_LABEL_IDS = 1_000_000
 
 
@@ -943,10 +933,7 @@ def single_linkage(
     are auditable via :func:`single_linkage_dendrogram`).
     """
     from raft_spark.operators.reductions import global_rank
-    from raft_spark.operators.solvers import (
-        connected_components, connected_components_auto, driver_union_find,
-        labels_frame, probe_edges_driver,
-    )
+    from raft_spark.operators.solvers import connected_components_auto
 
     if (n_clusters is None) == (distance_threshold is None):
         raise ValueError(
@@ -970,38 +957,7 @@ def single_linkage(
             .filter(F.col("row") != F.col("col"))
             .distinct()
         )
-        # ONE edge probe (shared seam with connected_components_auto —
-        # same threshold, so this adds no pass it would not have paid):
-        # when the thresholded edge table fits, the flat labeling is a
-        # driver union-find, and when the id table ALSO fits a capped
-        # one-job Arrow collect the final ids join renders driver-side
-        # too (the dedup_clusters discipline — coalesce(label, id) is
-        # exactly lab.get(i, i), duplicate ids replicate per
-        # occurrence). Null ids or a corpus-scale id table keep the
-        # distributed join; a corpus-scale edge table keeps the fully
-        # distributed CC solve.
-        probe = probe_edges_driver(kept)
-        if probe is not None:
-            lab = driver_union_find(
-                (int(r["row"]), int(r["col"])) for r in probe
-            )
-            spark = df.sparkSession
-            t = SS.collect_capped(ids, _DRIVER_LABEL_IDS)
-            if t is not None:
-                idl = t.column("id").to_pylist()
-                if not any(i is None for i in idl):
-                    import pyarrow as pa
-
-                    return spark.createDataFrame(pa.table({
-                        "id": pa.array(idl, pa.int64()),
-                        "cluster": pa.array(
-                            [lab.get(i, i) for i in idl], pa.int64()),
-                    }))
-            labels = labels_frame(spark, lab)
-        else:
-            labels = connected_components(
-                kept.withColumn("value", F.lit(1.0))
-            )
+        labels = connected_components_auto(kept)
     else:
         tree = _slink_tree(df, pairs, metric, id_col, vec_col, n_blocks, p=p)
         tree = tree.localCheckpoint(eager=True)  # count + rank + CC consumers
@@ -1090,6 +1046,110 @@ def _partial_topk(s, nids, qid_vals, k):
     return out_q, out_n, out_c
 
 
+def _cosine6(m, qt):
+    """Cosine block ``m @ qt`` (B×d unit rows · d×|Q| unit columns)
+    through the :mod:`raft_spark.functions.xp` matmul hook (the GPU
+    does the matmul only; rank/cut/round stay host float64), rounded
+    half-AWAY-from-zero to 1e-6 to match F.round / DuckDB round()
+    (np.round is banker's half-to-even: a cosine landing exactly on
+    .5e-6 would flip rank across engines)."""
+    import numpy as np
+
+    from raft_spark.functions.xp import to_np, xp
+
+    ap = xp()
+    raw = to_np(ap.asarray(m) @ ap.asarray(qt))
+    return np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
+
+
+def _topk_scan(
+    corpus: DataFrame,
+    queries,
+    make_score,
+    k: int,
+    order_col: str,
+    ascending: bool = False,
+    strategy: str = "numpy",
+    expr=None,
+    max_collect: int = MAX_COLLECT_QUERIES,
+) -> DataFrame:
+    """The collected-query partial top-k shared by every ANN tier —
+    RAFT's batched ``matrix::select_k`` cut (local top-k per block,
+    then one merge) → (qid, nid, ``order_col``, rank).
+
+    ``queries`` is the query frame, sized and collected by
+    :func:`_resolve_scan_strategy` under ``strategy``, or its rows
+    already collected by the caller. On the numpy leg
+    ``make_score(rows)`` builds the tier's scorer on the driver;
+    ``score(pdf)`` yields ``(s, nids, qids)`` blocks for one Arrow batch
+    of ``corpus`` (``s``: B×|Q| float64, −inf = excluded). Each corpus
+    partition drops self-matches, keeps its tie-exact local top-k per
+    query (:func:`_partial_topk`) so the shuffle carries
+    O(partitions·|Q|·k) rows, and one ``agg`` select_k merges the
+    survivors. ``ascending`` ranks ``order_col`` low-first (Hamming).
+
+    The expr leg scores ``expr`` (a Column over ``_va`` = query vector,
+    ``_vb`` = corpus vector) on the blocked equi-join product of the
+    first two columns (id, vector) of each frame: a query side too big
+    to collect is too big to broadcast, so never a nested-loop join.
+    The chosen leg is recorded on the result as ``_knn_strategy``."""
+    if isinstance(queries, DataFrame):
+        chosen, rows = _resolve_scan_strategy(queries, strategy, max_collect)
+    else:
+        chosen, rows = "numpy", queries
+    if rows is None:
+        qid, qv = queries.columns[:2]
+        nid, nv = corpus.columns[:2]
+        scored = _blocked_cross(
+            queries.select(F.col(qid).alias("a"), F.col(qv).alias("_va")),
+            corpus.select(F.col(nid).alias("b"), F.col(nv).alias("_vb")),
+            symmetric=False,
+        ).filter(F.col("a") != F.col("b")).select(
+            F.col("a").alias("qid"), F.col("b").alias("nid"),
+            expr.alias(order_col),
+        )
+        merge = "auto"
+    else:
+        import numpy as np
+        import pandas as pd
+
+        score = make_score(rows)
+
+        def pp(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                out_q, out_n, out_c = [], [], []
+                for s, nids, qids in score(pdf):
+                    if ascending:
+                        s = -s
+                    # self-matches drop out of every ranking up front;
+                    # the batched tie-exact cut replaces a per-query
+                    # lexsort (measured 73 s → ~8 s at 1M×100q)
+                    s[nids[:, None] == qids[None, :]] = -np.inf
+                    q_, n_, c_ = _partial_topk(s, nids, qids, k)
+                    out_q += q_
+                    out_n += n_
+                    out_c += c_
+                if out_q:
+                    c = np.concatenate(out_c)
+                    yield pd.DataFrame({
+                        "qid": np.concatenate(out_q),
+                        "nid": np.concatenate(out_n),
+                        order_col: -c if ascending else c,
+                    })
+
+        scored = corpus.mapInPandas(
+            pp, f"qid long, nid long, {order_col} double")
+        merge = "agg"  # ≤ partitions·k rows per query survive
+    out = select_k(
+        scored, group_cols=["qid"], order_col=order_col, k=k,
+        ascending=ascending, payload_cols=["nid"], strategy=merge,
+    )
+    out._knn_strategy = chosen
+    return out
+
+
 def _apply_id_filter(df, col, filter_ids, filter_mode):
     """Shared allow/deny id-mask seam of the filtered-search paths
     (cuVS filtering::bitset_filter semantics). filter_ids: a one-column
@@ -1125,18 +1185,20 @@ def knn_brute(
     only its LOCAL top-k per query, so the shuffle carries
     O(partitions·|Q|·k) rows — the literal partial-then-merge design
     of the reference's select_k (matrix/select_k.cuh:75) with the dot
-    products batched instead of per-pair expressions.
+    products batched instead of per-pair expressions (the shared
+    :func:`_topk_scan` kernel).
 
-    strategy="expr": JVM-expression scoring (broadcast join) through
-    the bounded two-phase select_k — no driver collect of the query
-    side at all.
+    strategy="expr": JVM-expression scoring over the blocked equi-join
+    product through the bounded two-phase select_k — no driver collect
+    of the query side at all.
 
-    strategy="auto" (default): ONE distributed count() probes the
-    query side; ≤ ``max_collect_queries`` rows (the Q≪N regime, ~10 MB
-    of closure at d=64) takes the numpy path, anything larger degrades
+    strategy="auto" (default): ONE capped collect probes the query
+    side; ≤ ``max_collect_queries`` rows (the Q≪N regime, ~10 MB of
+    closure at d=64) takes the numpy path, anything larger degrades
     gracefully to the expr path instead of OOMing the driver on the
     collect. The chosen path is recorded on the result as
-    ``_knn_strategy`` (for tests/plan audits).
+    ``_knn_strategy`` (for tests/plan audits). Any other strategy
+    raises ValueError.
 
     ``filter_ids`` (one id column) restricts the NEIGHBOR side before
     scoring — the reference family's filtered search (cuVS
@@ -1156,73 +1218,22 @@ def knn_brute(
     q = _norm_table(queries, id_col, vec_col).select(
         F.col("_id").alias("qid"), F.col("_v").alias("_vq")
     )
-    strategy, q_rows = _resolve_scan_strategy(q, strategy,
-                                              max_collect_queries)
-    chosen = strategy
-    if strategy == "numpy":
+
+    def make_score(rows):
         import numpy as np
-        import pandas as pd
 
-        qids = np.array([r["qid"] for r in q_rows])
-        qm = np.array([r["_vq"] for r in q_rows])  # |Q|×d
+        qids = np.array([r["qid"] for r in rows])
+        qt = np.array([r["_vq"] for r in rows]).T  # d×|Q|
+        return lambda pdf: [(
+            _cosine6(np.stack(pdf["_vc"].to_numpy()).astype(float), qt),
+            pdf["nid"].to_numpy(), qids,
+        )]
 
-        def pp(batches):
-            from raft_spark.functions.xp import to_np, xp
-
-            ap = xp()  # GPU does the matmul only; rank/cut/round stay
-            qd = ap.asarray(qm.T)  # host float64 (engine-exact order)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                m = np.stack(pdf["_vc"].to_numpy()).astype(float)
-                nids = pdf["nid"].to_numpy()
-                raw = to_np(ap.asarray(m) @ qd)  # batch×|Q|
-                # half-AWAY-from-zero to match F.round / DuckDB round()
-                # (np.round is banker's half-to-even: a cosine landing
-                # exactly on .5e-6 would flip rank across engines)
-                s = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-                # self-matches drop out of every ranking up front; the
-                # batched tie-exact cut replaces a per-query lexsort of
-                # the whole partition (measured 73 s → ~8 s at 1M×100q)
-                s[nids[:, None] == qids[None, :]] = -np.inf
-                out_q, out_n, out_c = _partial_topk(s, nids, qids, k)
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.concatenate(out_q),
-                            "nid": np.concatenate(out_n),
-                            "cosine": np.concatenate(out_c),
-                        }
-                    )
-
-        scored = c.mapInPandas(pp, "qid long, nid long, cosine double")
-        merge = "agg"  # ≤ partitions·k rows per query survive
-    else:
-        # blocked product, NOT broadcast(q) with a non-equi join: this
-        # path exists precisely because Q is too big to collect, so it
-        # must also be too big to broadcast — the blocked equi-joins
-        # realize Q×N with bounded task memory (the pairwise_distances
-        # shape), and the qid != nid filter runs after the join
-        scored = _blocked_cross(
-            q.select(F.col("qid").alias("a"), F.col("_vq").alias("_va")),
-            c.select(F.col("nid").alias("b"), F.col("_vc").alias("_vb")),
-            symmetric=False,
-        ).filter(F.col("a") != F.col("b")).select(
-            F.col("a").alias("qid"), F.col("b").alias("nid"),
-            F.round(A.dot("_va", "_vb"), 6).alias("cosine"),
-        )
-        merge = "auto" if strategy == "expr" else strategy
-    out = select_k(
-        scored,
-        group_cols=["qid"],
-        order_col="cosine",
-        k=k,
-        ascending=False,
-        payload_cols=["nid"],
-        strategy=merge,
+    return _topk_scan(
+        c, q, make_score, k, "cosine", strategy=strategy,
+        expr=F.round(A.dot("_va", "_vb"), 6),
+        max_collect=max_collect_queries,
     )
-    out._knn_strategy = chosen
-    return out
 
 
 def nn_descent_graph(
@@ -2212,6 +2223,32 @@ def pq_encode(
     return df.select(id_col, vec_col).mapInPandas(pp, "id long, codes array<int>")
 
 
+def _pq_lut(Q, B):
+    """ADC lookup tables of a query block ``Q`` (|Q|×d) against PQ
+    codebooks ``B`` (m×n_codes×d/m): LUT[qi, s, c] = <q_sub_s,
+    codeword_c> — the approximate inner product decomposes per
+    subspace."""
+    import numpy as np
+
+    dsub = B.shape[2]
+    return np.stack(
+        [Q[:, s * dsub:(s + 1) * dsub] @ B[s].T for s in range(len(B))],
+        axis=1,
+    )
+
+
+def _adc_scores(lut, codes):
+    """ADC block for one Arrow batch of PQ ``codes`` (array<int> per
+    row): scores[b, qi] = Σ_s lut[qi, s, C[b, s]] → B×|Q| float64."""
+    import numpy as np
+
+    C = np.stack(codes.to_numpy()).astype(int)  # batch × m
+    scores = np.zeros((len(C), lut.shape[0]))
+    for s in range(lut.shape[1]):
+        scores += lut[:, s, C[:, s]].T
+    return scores
+
+
 def knn_pq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2243,7 +2280,6 @@ def knn_pq(
     exact cosines (post-refinement).
     """
     import numpy as np
-    import pandas as pd
 
     # materialize the normalized corpus once: it feeds the codebook
     # training (count + sample), the encode pass, and the refine join
@@ -2256,48 +2292,20 @@ def knn_pq(
     if codebooks is None:
         codebooks = pq_train(cn, m_subspaces, n_codes, vec_col=vec_col)
     B = np.asarray(codebooks, dtype=float)
-    m, _, dsub = B.shape
     codes_df = pq_encode(cn, B, id_col="_id", vec_col=vec_col)
-
-    q_rows = _collect_queries(qn)  # Q≪N contract, same as knn_brute numpy path
-    qids = np.array([r["_id"] for r in q_rows])
-    Q = np.array([r[vec_col] for r in q_rows], dtype=float)
-    # LUT[qi, s, c] = <q_sub, codeword> — approx IP decomposes per subspace
-    lut = np.stack([Q[:, s * dsub:(s + 1) * dsub] @ B[s].T for s in range(m)], axis=1)
     k_short = k * refine_factor
 
-    def pp(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack(pdf["codes"].to_numpy()).astype(int)  # batch × m
-            nids = pdf["id"].to_numpy()
-            # scores[b, qi] = Σ_s lut[qi, s, C[b, s]]
-            scores = np.zeros((len(C), len(qids)))
-            for s in range(m):
-                scores += lut[:, s, C[:, s]].T
-            # batched tie-exact local shortlist cut (shared with
-            # knn_brute/knn_ivf) — replaces a per-query lexsort of the
-            # whole code batch
-            scores[nids[:, None] == qids[None, :]] = -np.inf
-            out_q, out_n, out_c = _partial_topk(scores, nids, qids, k_short)
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "adc": np.concatenate(out_c),
-                    }
-                )
+    def make_score(rows):
+        qids = np.array([r["_id"] for r in rows])
+        lut = _pq_lut(np.array([r[vec_col] for r in rows], dtype=float), B)
+        return lambda pdf: [
+            (_adc_scores(lut, pdf["codes"]), pdf["id"].to_numpy(), qids)]
 
-    shortlist = codes_df.mapInPandas(pp, "qid long, nid long, adc double")
     # global shortlist cut (ADC order), then exact re-rank: join the
     # shortlist (tiny — broadcast side) back to the raw normalized
     # vectors; the corpus scan prunes to the |Q|·k_short semi-join.
-    short = select_k(
-        shortlist, group_cols=["qid"], order_col="adc", k=k_short,
-        ascending=False, payload_cols=["nid"], strategy="agg",
-    ).select("qid", "nid")
+    short = _topk_scan(codes_df, qn, make_score, k_short, "adc") \
+        .select("qid", "nid")
     qv = qn.select(F.col("_id").alias("qid"), F.col(vec_col).alias("_vq"))
     refined = (
         cn.select(F.col("_id").alias("nid"), F.col(vec_col).alias("_vc"))
@@ -2450,7 +2458,6 @@ def knn_ivf_pq(
     probed lists (the usual IVF recall contract).
     """
     import numpy as np
-    import pandas as pd
 
     cn = _norm_table(corpus, id_col, vec_col).withColumnRenamed("_v", vec_col)
     qn = _norm_table(queries, id_col, vec_col).withColumnRenamed("_v", vec_col)
@@ -2464,53 +2471,33 @@ def knn_ivf_pq(
     n_probe = min(n_probe, n_lists)
 
     B = np.asarray(index["codebooks"], dtype=float)
-    m, _, dsub = B.shape
     codes = _apply_id_filter(index["codes"], "id", filter_ids, filter_mode)
-
-    q_rows = _collect_queries(qn)  # Q≪N contract
-    qids = np.array([r["_id"] for r in q_rows])
-    Q = np.array([r[vec_col] for r in q_rows], dtype=float)
-    qc = Q @ C.T  # |Q|×n_lists: the <q, centroid> offsets
-    # per-query probe sets: n_probe nearest centroids by L2 in the
-    # normalized space (same metric as the assigner)
-    d2 = (Q * Q).sum(1)[:, None] - 2.0 * qc + (C * C).sum(1)[None, :]
-    probes = np.argsort(d2, axis=1)[:, :n_probe]
-    probe_mask = np.zeros((len(qids), n_lists), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[qi, probes[qi]] = True
-    lut = np.stack([Q[:, s * dsub:(s + 1) * dsub] @ B[s].T for s in range(m)], axis=1)
     k_short = k * refine_factor
 
-    def pp(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            CC = np.stack(pdf["codes"].to_numpy()).astype(int)
-            lists = pdf["list_id"].to_numpy()
-            nids = pdf["id"].to_numpy()
-            adc = np.zeros((len(CC), len(qids)))
-            for s in range(m):
-                adc += lut[:, s, CC[:, s]].T
-            scores = adc + qc[:, lists].T  # + <q, centroid(list)>
-            # un-probed lists and self-matches drop out before the
-            # batched tie-exact cut (shared _partial_topk)
-            scores[~probe_mask[:, lists].T] = -np.inf
-            scores[nids[:, None] == qids[None, :]] = -np.inf
-            out_q, out_n, out_c = _partial_topk(scores, nids, qids, k_short)
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "adc": np.concatenate(out_c),
-                    }
-                )
+    def make_score(rows):
+        qids = np.array([r["_id"] for r in rows])
+        Q = np.array([r[vec_col] for r in rows], dtype=float)
+        qc = Q @ C.T  # |Q|×n_lists: the <q, centroid> offsets
+        # per-query probe sets: n_probe nearest centroids by L2 in the
+        # normalized space (same metric as the assigner)
+        d2 = (Q * Q).sum(1)[:, None] - 2.0 * qc + (C * C).sum(1)[None, :]
+        probes = np.argsort(d2, axis=1)[:, :n_probe]
+        probe_mask = np.zeros((len(qids), n_lists), dtype=bool)
+        for qi in range(len(qids)):
+            probe_mask[qi, probes[qi]] = True
+        lut = _pq_lut(Q, B)
 
-    shortlist = codes.mapInPandas(pp, "qid long, nid long, adc double")
-    short = select_k(
-        shortlist, group_cols=["qid"], order_col="adc", k=k_short,
-        ascending=False, payload_cols=["nid"], strategy="agg",
-    ).select("qid", "nid")
+        def score(pdf):
+            lists = pdf["list_id"].to_numpy()
+            # + <q, centroid(list)>; un-probed lists drop out
+            s = _adc_scores(lut, pdf["codes"]) + qc[:, lists].T
+            s[~probe_mask[:, lists].T] = -np.inf
+            return [(s, pdf["id"].to_numpy(), qids)]
+
+        return score
+
+    short = _topk_scan(codes, qn, make_score, k_short, "adc") \
+        .select("qid", "nid")
     qv = qn.select(F.col("_id").alias("qid"), F.col(vec_col).alias("_vq"))
     refined = (
         cn.select(F.col("_id").alias("nid"), F.col(vec_col).alias("_vc"))
@@ -2546,7 +2533,6 @@ def knn_ivf(
     Output matches knn_brute's schema (qid, nid, cosine, rank).
     """
     import numpy as np
-    import pandas as pd
 
     # spherical IVF: quantize in the L2-normalized space (the same
     # space the cosine scoring runs in). The normalized corpus is
@@ -2568,11 +2554,11 @@ def knn_ivf(
     )
 
     # query probes computed DRIVER-side against the k×d centroid matrix
-    # (queries are collect-guarded by the Q≪N contract — no Spark pass),
-    # then the scoring ships query vectors + their probed lists in the
-    # task closure and runs ONE BLAS sub-matmul per (batch, probed
-    # list): same arithmetic, quantization and tie order as knn_brute,
-    # so full-probe output is identical to brute force — but candidate
+    # (ONE capped collect both sizes and delivers the query side), then
+    # the scoring ships query vectors + their probed lists in the task
+    # closure and runs ONE BLAS sub-matmul per (batch, probed list):
+    # same arithmetic, quantization and tie order as knn_brute, so
+    # full-probe output is identical to brute force — but candidate
     # volume is n_probe/n_lists of it (the per-pair JVM dot join this
     # replaces measured 26.5 s vs brute's 4 s at 1M×100q).
     #
@@ -2582,14 +2568,14 @@ def knn_ivf(
     # argmin pass (_assign_lists), candidates by a (list_id) equi-join,
     # scoring by the JVM dot expression with brute's quantization.
     # Slower per pair than the closure-BLAS path but O(1) driver state
-    # at ANY query count — the pre-r3 behavior restored as a fallback.
-    qn_full = _norm_table(queries, id_col, vec_col).withColumnRenamed(
+    # at ANY query count.
+    qn = _norm_table(queries, id_col, vec_col).withColumnRenamed(
         "_v", vec_col
     )
-    probe_cnt = qn_full.limit(MAX_COLLECT_QUERIES + 1).count()
-    if probe_cnt > MAX_COLLECT_QUERIES:
+    q_rows = SS.collect_capped_rows(qn, MAX_COLLECT_QUERIES)
+    if q_rows is None:
         q_assigned = _assign_lists(
-            qn_full, cents, vec_col, n_probe=n_probe
+            qn, cents, vec_col, n_probe=n_probe
         ).select(
             F.col("_id").alias("qid"), F.col(vec_col).alias("_vq"), "list_id"
         )
@@ -2608,63 +2594,38 @@ def knn_ivf(
             scored, group_cols=["qid"], order_col="cosine", k=k,
             ascending=False, payload_cols=["nid"], strategy="jvm",
         )
-
-    q_rows = _collect_queries(
-        _norm_table(queries, id_col, vec_col), MAX_COLLECT_QUERIES
-    )
     if not q_rows:  # empty query side → empty result, not an AxisError
         return corpus.sparkSession.createDataFrame(
             [], "qid long, nid long, cosine double, rank int"
         )
-    qids = np.array([r["_id"] for r in q_rows])
-    qm = np.array([r["_v"] for r in q_rows])  # |Q|×d
-    C = np.asarray(cents, dtype=float)
-    d2 = (qm * qm).sum(1)[:, None] - 2.0 * qm @ C.T + (C * C).sum(1)[None, :]
-    probe_lists = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
-    by_list: dict[int, np.ndarray] = {}
-    for li in range(n_lists):
-        sub = np.nonzero((probe_lists == li).any(axis=1))[0]
-        if len(sub):
-            by_list[li] = sub
 
-    def pp(batches):
-        from raft_spark.functions.xp import to_np, xp
+    def make_score(rows):
+        qids = np.array([r["_id"] for r in rows])
+        qm = np.array([r[vec_col] for r in rows])  # |Q|×d
+        C = np.asarray(cents, dtype=float)
+        d2 = (qm * qm).sum(1)[:, None] - 2.0 * qm @ C.T \
+            + (C * C).sum(1)[None, :]
+        probe_lists = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
+        by_list: dict[int, np.ndarray] = {}
+        for li in range(n_lists):
+            sub = np.nonzero((probe_lists == li).any(axis=1))[0]
+            if len(sub):
+                by_list[li] = sub
+        qt = qm.T
 
-        ap = xp()
-        qd = ap.asarray(qm.T)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+        def score(pdf):
             m = np.stack(pdf["_vc"].to_numpy()).astype(float)
             nids = pdf["nid"].to_numpy()
             lists = pdf["list_id"].to_numpy()
-            out_q, out_n, out_c = [], [], []
             for li in np.unique(lists):
                 qsub = by_list.get(int(li))
-                if qsub is None:
-                    continue
-                rows = np.nonzero(lists == li)[0]
-                raw = to_np(ap.asarray(m[rows]) @ qd[:, qsub])
-                s = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-                s[nids[rows][:, None] == qids[qsub][None, :]] = -np.inf
-                q_, n_, c_ = _partial_topk(s, nids[rows], qids[qsub], k)
-                out_q += q_
-                out_n += n_
-                out_c += c_
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
+                if qsub is not None:
+                    sel = np.nonzero(lists == li)[0]
+                    yield _cosine6(m[sel], qt[:, qsub]), nids[sel], qids[qsub]
 
-    scored = c_assigned.mapInPandas(pp, "qid long, nid long, cosine double")
-    return select_k(
-        scored, group_cols=["qid"], order_col="cosine", k=k,
-        ascending=False, payload_cols=["nid"], strategy="agg",
-    )
+        return score
+
+    return _topk_scan(c_assigned, q_rows, make_score, k, "cosine")
 
 
 def knn_ivf_metric(
@@ -3030,9 +2991,9 @@ def knn_bq(
       query (−Hamming through the shared :func:`_partial_topk`, so the
       (hamming asc, nid asc) cut is bit-identical to the JVM total
       order), and the shuffle carries O(partitions·|Q|·k·rf) rows.
-    - strategy="expr": the original broadcast join + JVM
-      shiftleft/XOR/bit_count expression through the bounded two-phase
-      select_k — no driver collect at any |Q|.
+    - strategy="expr": the JVM XOR/bit_count expression over the
+      blocked equi-join product through the bounded two-phase
+      select_k — no driver collect (and no broadcast) at any |Q|.
 
     Both paths feed the same exact-cosine refine, so the result is
     byte-identical either way (Hamming is integer — no rounding seam).
@@ -3046,9 +3007,6 @@ def knn_bq(
     still needed for the exact-cosine refine stage.
     """
     import numpy as np
-    import pandas as pd
-
-    from raft_spark.operators.selectk import select_k
 
     dc = _validated_dim(corpus, vec_col, "knn_bq")
     dq = _validated_dim(queries, vec_col, "knn_bq")
@@ -3071,48 +3029,25 @@ def knn_bq(
         cb = binary_quantize(corpus, id_col=id_col, vec_col=vec_col,
                              _d=dc, strategy="arrow")
     qb = binary_quantize(queries, id_col=id_col, vec_col=vec_col, _d=dq)
-    k_short = k * refine_factor
-    strategy, q_rows = _resolve_scan_strategy(qb, strategy,
-                                              max_collect_queries)
-    if strategy == "numpy":
-        qids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-        qm = np.array([r["bq"] for r in q_rows]).astype(np.uint64)  # |Q|×W
 
-        def pp(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cm = np.stack(pdf["bq"].to_numpy()).astype(np.uint64)
-                nids = pdf["id"].to_numpy()
-                h = np.zeros((cm.shape[0], qm.shape[0]), dtype=np.int64)
-                for w in range(cm.shape[1]):
-                    h += _popcount64(cm[:, w:w + 1] ^ qm[None, :, w])
-                s = -h.astype(float)  # descending == hamming ascending
-                s[nids[:, None] == qids[None, :]] = -np.inf
-                out_q, out_n, out_c = _partial_topk(s, nids, qids, k_short)
-                if out_q:
-                    yield pd.DataFrame({
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "hamming": -np.concatenate(out_c),
-                    })
+    def make_score(rows):
+        qids = np.array([r["id"] for r in rows], dtype=np.int64)
+        qm = np.array([r["bq"] for r in rows]).astype(np.uint64)  # |Q|×W
 
-        scored = cb.mapInPandas(pp, "qid long, nid long, hamming double")
-        merge = "agg"  # ≤ partitions·k·rf rows per query survive
-    else:
-        scored = (
-            cb.select(F.col("id").alias("nid"), F.col("bq").alias("_cb"))
-            .join(F.broadcast(
-                qb.select(F.col("id").alias("qid"), F.col("bq").alias("_qb"))))
-            .filter(F.col("qid") != F.col("nid"))
-            .select("qid", "nid",
-                    hamming_packed(F.col("_qb"), F.col("_cb"))
-                    .cast("double").alias("hamming"))
-        )
-        merge = "auto"
-    short = select_k(
-        scored, group_cols=["qid"], order_col="hamming",
-        k=k_short, ascending=True, payload_cols=["nid"], strategy=merge,
+        def score(pdf):
+            cm = np.stack(pdf["bq"].to_numpy()).astype(np.uint64)
+            h = np.zeros((cm.shape[0], qm.shape[0]), dtype=np.int64)
+            for w in range(cm.shape[1]):
+                h += _popcount64(cm[:, w:w + 1] ^ qm[None, :, w])
+            return [(h.astype(float), pdf["id"].to_numpy(), qids)]
+
+        return score
+
+    short = _topk_scan(
+        cb, qb, make_score, k * refine_factor, "hamming", ascending=True,
+        strategy=strategy,
+        expr=hamming_packed(F.col("_va"), F.col("_vb")).cast("double"),
+        max_collect=max_collect_queries,
     ).select("qid", "nid")
     return knn_refine(short, corpus, queries, k=k, metric="cosine",
                       id_col=id_col, vec_col=vec_col)
@@ -3198,7 +3133,8 @@ def knn_sq(
     Same strategy split as knn_brute/knn_bq: collected query codes +
     per-partition int32 BLAS dot with tie-exact local top-k·rf
     (default when |Q| ≤ ``max_collect_queries``), or the JVM zip_with
-    expression path at any |Q|. Integer scores, so both paths cut
+    expression over the blocked equi-join product at any |Q| (the
+    shared :func:`_topk_scan` kernel). Integer scores, so both paths cut
     bit-identically and feed the same exact-cosine refine.
 
     ``index_path`` serves from a persisted :func:`write_sq_index`:
@@ -3208,9 +3144,6 @@ def knn_sq(
     inline path computes); ``corpus`` floats are still needed for the
     exact-cosine refine stage."""
     import numpy as np
-    import pandas as pd
-
-    from raft_spark.operators.selectk import select_k
 
     dc = _validated_dim(corpus, vec_col, "knn_sq")
     dq = _validated_dim(queries, vec_col, "knn_sq")
@@ -3231,55 +3164,26 @@ def knn_sq(
                                    _d=dc)
     qq, _ = scalar_quantize(queries, amax=amax, id_col=id_col,
                             vec_col=vec_col, _d=dq)
-    k_short = k * refine_factor
-    strategy, q_rows = _resolve_scan_strategy(qq, strategy,
-                                              max_collect_queries)
-    if strategy == "numpy":
-        qids = np.array([r["id"] for r in q_rows], dtype=np.int64)
+
+    def make_score(rows):
         # int32 accumulates exactly up to d ≈ 133k at |code| ≤ 127;
         # widen to int64 beyond that
         acc_t = np.int32 if dc * 127 * 127 < 2 ** 31 else np.int64
-        qm = np.array([r["sq"] for r in q_rows], dtype=acc_t)  # |Q|×d
+        qids = np.array([r["id"] for r in rows], dtype=np.int64)
+        qt = np.array([r["sq"] for r in rows], dtype=acc_t).T  # d×|Q|
+        # B×|Q| integer dot — exact (|code| ≤ 127)
+        return lambda pdf: [(
+            (np.stack(pdf["sq"].to_numpy()).astype(acc_t) @ qt)
+            .astype(float), pdf["id"].to_numpy(), qids,
+        )]
 
-        def pp(batches):
-            qt = qm.T  # d×|Q|
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cm = np.stack(pdf["sq"].to_numpy()).astype(acc_t)
-                nids = pdf["id"].to_numpy()
-                ip = cm @ qt  # B×|Q| integer — exact (|code| ≤ 127)
-                s = ip.astype(float)
-                s[nids[:, None] == qids[None, :]] = -np.inf
-                out_q, out_n, out_c = _partial_topk(s, nids, qids, k_short)
-                if out_q:
-                    yield pd.DataFrame({
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "ip": np.concatenate(out_c),
-                    })
-
-        scored = cq.mapInPandas(pp, "qid long, nid long, ip double")
-        merge = "agg"
-    else:
-        scored = (
-            cq.select(F.col("id").alias("nid"), F.col("sq").alias("_cc"))
-            .join(F.broadcast(
-                qq.select(F.col("id").alias("qid"), F.col("sq").alias("_qc"))))
-            .filter(F.col("qid") != F.col("nid"))
-            .select(
-                "qid", "nid",
-                F.aggregate(
-                    F.zip_with("_qc", "_cc",
-                               lambda a, b: (a * b).cast("long")),
-                    F.lit(0).cast("long"), lambda acc, v: acc + v,
-                ).cast("double").alias("ip"),
-            )
-        )
-        merge = "auto"
-    short = select_k(
-        scored, group_cols=["qid"], order_col="ip",
-        k=k_short, ascending=False, payload_cols=["nid"], strategy=merge,
+    short = _topk_scan(
+        cq, qq, make_score, k * refine_factor, "ip", strategy=strategy,
+        expr=F.aggregate(
+            F.zip_with("_va", "_vb", lambda a, b: (a * b).cast("long")),
+            F.lit(0).cast("long"), lambda acc, v: acc + v,
+        ).cast("double"),
+        max_collect=max_collect_queries,
     ).select("qid", "nid")
     return knn_refine(short, corpus, queries, k=k, metric="cosine",
                       id_col=id_col, vec_col=vec_col)

@@ -392,6 +392,27 @@ def test_filtered_knn_plan_no_nested_loop(spark, sf_dir):
     assert all(r["nid"] % 2 == 0 for r in out.collect())
 
 
+def test_quantized_expr_legs_plan_blocked_product(spark, sf_dir):
+    """knn_bq / knn_sq strategy="expr" score on knn_brute's blocked
+    equi-join product: that leg runs because the query side is too big
+    to collect, so it must not be broadcast into a nested-loop join
+    either. The scans take exactly auto|numpy|expr as a strategy."""
+    import pytest
+
+    from raft_spark.operators.similarity import knn_bq, knn_brute, knn_sq
+    from raft_spark.sources.tables import embeddings_matrix
+
+    m = embeddings_matrix(spark, sf_dir).select("id", "features")
+    q = m.filter(F.col("id") % 100 == 0)
+    for knn in (knn_bq, knn_sq):
+        rep = audit_plan(knn(m, q, k=5, strategy="expr"))
+        assert "CartesianProduct" not in rep.text
+        assert "BroadcastNestedLoop" not in rep.text
+    for knn in (knn_brute, knn_bq, knn_sq):
+        with pytest.raises(ValueError, match="strategy"):
+            knn(m, q, k=5, strategy="jvm")
+
+
 def test_span_ingest_plan_no_cartesian(spark, sf_dir, tmp_path):
     """r10 span-state ingest: every probe is an equi-join (hash /
     doc_id keys); the delta's flag frame must never cross-product."""

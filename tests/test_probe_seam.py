@@ -1,11 +1,12 @@
 """Every driver-strategy size probe goes through one seam:
 ``statestore.collect_capped`` / ``collect_capped_rows`` (a capped
 ``limit(cap+1)`` collect under ``_no_aqe(limit_rows=cap)``). A
-hand-rolled ``.limit(<expr> + 1).collect()`` / ``.toArrow()`` anywhere
-else in the package would bypass the first-pass partition bound, so
-this test fails on one. (A ``.limit(n + 1).count()`` is a different
-pattern and is not matched.) The seam's partition-count bound must also
-hold when capped sections overlap across threads."""
+hand-rolled ``.limit(<expr> + 1).collect()`` / ``.toArrow()`` /
+``.count()`` anywhere else in the package would bypass the first-pass
+partition bound (and a count probe pays extra jobs, then still has to
+collect the rows), so this test fails on one. The seam's
+partition-count bound must also hold when capped sections overlap
+across threads."""
 
 from __future__ import annotations
 
@@ -20,12 +21,12 @@ SEAM = PKG / "operators" / "statestore.py"
 
 
 def _capped_collects(tree: ast.AST):
-    """Line numbers of ``<x>.limit(<expr> + 1).collect()`` and
-    ``.toArrow()`` calls in a parsed module."""
+    """Line numbers of ``<x>.limit(<expr> + 1).collect()``,
+    ``.toArrow()`` and ``.count()`` calls in a parsed module."""
     for node in ast.walk(tree):
         if not (isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("collect", "toArrow")):
+                and node.func.attr in ("collect", "toArrow", "count")):
             continue
         inner = node.func.value
         if not (isinstance(inner, ast.Call)
@@ -46,7 +47,7 @@ def test_detector_matches_the_probe_shapes():
         "c = df.limit(cap + 1).count()\n"
         "d = df.limit(cap).collect()\n"
     )
-    assert list(_capped_collects(ast.parse(src))) == [1, 2]
+    assert list(_capped_collects(ast.parse(src))) == [1, 2, 4]
 
 
 def test_capped_collects_only_in_the_seam():

@@ -11,9 +11,10 @@
 3. The limit-probe partition cap (_no_aqe(limit_rows=...)) must bound
    spark.sql.limit.initialNumPartitions while open and RESTORE it on
    exit, nested or not.
-4. The dbscan / single_linkage driver label finishes (taken when the
-   ε-pair table is a driver-resident LocalRelation / the edge probe
-   fits) must match the forced distributed compositions row for row —
+4. The dbscan driver label finish and single_linkage's driver
+   union-find (taken when the ε-pair table is a driver-resident
+   LocalRelation / the edge probe fits) must match the forced
+   distributed compositions row for row —
    including duplicate ids, self loops, null endpoints, duplicated /
    both-orientation pair rows, isolated cores and border ties.
 """
@@ -322,19 +323,13 @@ def test_single_linkage_threshold_driver_finish_matches_distributed(
     )
     drv = sorted(map(tuple, SIM.single_linkage(
         df, distance_threshold=9.9, pairs=pairs).collect()))
-    # middle fallback: edge probe fits but the id table overflows the
-    # capped collect — labels become a distributed join input
-    with monkeypatch.context() as mp:
-        mp.setattr(SIM, "_DRIVER_LABEL_IDS", 0)
-        mid = sorted(map(tuple, SIM.single_linkage(
-            df, distance_threshold=9.9, pairs=pairs).collect()))
     # fully distributed: the edge probe itself declines
     with monkeypatch.context() as mp:
         mp.setattr(SV, "probe_edges_driver",
                    lambda coo, driver_threshold=500_000: None)
         dist = sorted(map(tuple, SIM.single_linkage(
             df, distance_threshold=9.9, pairs=pairs).collect()))
-    assert drv == mid == dist
+    assert drv == dist
     # duplicate id 60 replicated per occurrence, labelled component min
     assert drv.count((60, 50)) == 2
     # self-pair (4,4) is dropped: 4 is a singleton keeping its own id
